@@ -14,7 +14,11 @@ and a consumer incrementally folds them into the current table state.
 This module reimplements those semantics for our engine:
 
 - ``MaterializedTable`` — incremental view maintenance over a record
-  stream (reference ``lib/flink.py:21-45`` ``Table.update``).
+  stream (reference ``lib/flink.py:21-45`` ``Table.update``). Each
+  record costs O(1) whatever the table's size: a retraction looks its
+  row up in a hash index instead of scanning. ``rows`` keeps the
+  reference's list order: appends go to the end and a retraction
+  removes the first equal copy.
 - ``Changelog`` — validation + cursor-based consumption + full replay
   (reference ``lib/flink.py:53-131``).
 
@@ -27,6 +31,7 @@ at our engine: ``{"op": <int>, "row": [...]}`` for changelog results,
 from __future__ import annotations
 
 import logging
+from collections import deque
 from collections.abc import Iterable, Iterator
 from typing import Any
 
@@ -50,19 +55,72 @@ class ChangelogError(ValueError):
     """Raised on malformed changelog records (bad op / wrong arity)."""
 
 
+# Rows are indexed by a hashable stand-in for their value that is equal
+# exactly when the rows are equal as lists. JSON arrays freeze to tuples
+# and objects to tagged frozensets of their items, so array, struct and
+# map columns index too. In-process records carry Spark's own values:
+# Rows (tuples) are tagged as well, so that (1,) stays unequal to [1] as
+# under list equality, and bytearrays freeze to the bytes they equal.
+_TUPLE = object()
+_DICT = object()
+
+
+def _freeze(v: Any) -> Any:
+    if isinstance(v, list):
+        return tuple(map(_freeze, v))
+    if isinstance(v, tuple):
+        return (_TUPLE, *map(_freeze, v))
+    if isinstance(v, dict):
+        return (_DICT, frozenset((k, _freeze(x)) for k, x in v.items()))
+    if isinstance(v, bytearray):
+        return bytes(v)
+    return v
+
+
 class MaterializedTable:
     """Incrementally-maintained snapshot of a changelog stream.
 
     Semantics follow the reference (``lib/flink.py:27-45``): additive
     ops append the row; retractive ops remove one occurrence *by
-    value* (duplicates allowed — a retraction removes a single copy);
-    retracting an absent row is a warning, not an error; records with
-    no op (append-only results) are appended.
+    value* (duplicates allowed — a retraction removes the first equal
+    copy); retracting an absent row is a warning, not an error; records
+    with no op (append-only results) are appended.
+
+    Cost: O(1) per record, independent of the table's size. Rows live
+    in an insertion-ordered dict keyed by a sequence number, and an
+    index maps each row's frozen value to the sequence numbers holding
+    that value, oldest first, so a retraction finds the first equal copy
+    without scanning. ``rows`` is the reference's list, in its order.
+    Cells must be hashable or JSON-shaped (lists, dicts).
     """
 
     def __init__(self, columns: list[str], rows: list[list[Any]] | None = None):
         self.columns = list(columns)
-        self.rows: list[list[Any]] = [list(r) for r in (rows or [])]
+        self._rows: dict[int, list[Any]] = {}
+        # frozen row -> its one sequence number, or a FIFO of them
+        # while the table holds several equal copies (a deque for every
+        # row would cost about ten times the row itself)
+        self._where: dict[tuple, int | deque[int]] = {}
+        self._seq = 0
+        for r in rows or ():
+            self._append(list(r))
+
+    @property
+    def rows(self) -> list[list[Any]]:
+        return list(self._rows.values())
+
+    def _append(self, row: list[Any]) -> None:
+        seq = self._seq
+        self._seq = seq + 1
+        self._rows[seq] = row
+        key = tuple(map(_freeze, row))
+        seqs = self._where.get(key)
+        if seqs is None:
+            self._where[key] = seq
+        elif type(seqs) is int:
+            self._where[key] = deque((seqs, seq))
+        else:
+            seqs.append(seq)
 
     def apply(self, records: Iterable[dict]) -> "MaterializedTable":
         for rec in records:
@@ -71,16 +129,25 @@ class MaterializedTable:
             op = rec.get("op", None)
             row = rec["row"]
             if op in (OP_INSERT, OP_UPDATE_AFTER, None):
-                self.rows.append(list(row))
+                self._append(list(row))
             elif op in (OP_UPDATE_BEFORE, OP_DELETE):
-                try:
-                    self.rows.remove(list(row))
-                except ValueError:
+                key = tuple(map(_freeze, row))
+                seqs = self._where.get(key)
+                if seqs is None:
                     log.warning(
                         "retraction %s for absent row %r ignored",
                         OP_LABELS.get(op, op),
                         row,
                     )
+                    continue
+                if type(seqs) is int:
+                    del self._where[key]
+                    first = seqs
+                else:
+                    first = seqs.popleft()
+                    if len(seqs) == 1:
+                        self._where[key] = seqs[0]
+                del self._rows[first]
             else:
                 raise ChangelogError(f"unknown op code {op!r} in {rec!r}")
         return self
@@ -91,7 +158,7 @@ class MaterializedTable:
         return pd.DataFrame(self.rows, columns=self.columns)
 
     def __len__(self) -> int:
-        return len(self.rows)
+        return len(self._rows)
 
     def __eq__(self, other) -> bool:
         return (

@@ -1311,9 +1311,9 @@ def _dup_gram_pos(docs: DataFrame, sf_dir: str) -> DataFrame:
         )
         .filter(F.length("s64") >= _MIN_REPEAT)
     )
-    from streamlit_flink_demo_spark.sources.catalog import _table_bytes
+    from streamlit_flink_demo_spark.sources.catalog import table_bytes
 
-    if _table_bytes(sf_dir, "documents") > _PREFILTER_DOCS_BYTES:
+    if table_bytes(sf_dir, "documents") > _PREFILTER_DOCS_BYTES:
         # gate open: skip the prefilter (see _PREFILTER_DOCS_BYTES) —
         # exactness is carried by the tiers' own gsz >= 2 filters; no
         # persist either (caching every corpus position is the same

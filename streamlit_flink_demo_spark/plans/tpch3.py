@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from streamlit_flink_demo_spark.functions.numeric import dsum, dsum_sql
 from streamlit_flink_demo_spark.plans import register
-from streamlit_flink_demo_spark.sources.catalog import _table_bytes, load_table
+from streamlit_flink_demo_spark.sources.catalog import load_table, table_bytes
 
 # r14 (VERDICT r13 item 3): size gate for q21's two data-dependent
 # broadcast hints (F-orderkeys and the qualifying-order set, both
@@ -473,7 +473,7 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Above the gate both joins drop the hint: Spark plans them as
     shuffle joins, where AQE and the runtime Bloom filter take over —
     predictable degradation instead of a driver OOM."""
-    bcast_ok = _table_bytes(sf_dir, "orders") <= _Q21_BCAST_ORDERS_BYTES
+    bcast_ok = table_bytes(sf_dir, "orders") <= _Q21_BCAST_ORDERS_BYTES
     hint = F.broadcast if bcast_ok else (lambda df: df)
     o = (
         load_table(spark, sf_dir, "orders")

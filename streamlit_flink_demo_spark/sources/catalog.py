@@ -129,7 +129,13 @@ def spread(df: DataFrame, n: int | None = None, key: str | None = None) -> DataF
     return df.repartition(target)
 
 
-def _table_bytes(sf_dir: str, name: str) -> int:
+def table_bytes(sf_dir: str, name: str) -> int:
+    """On-disk bytes of table ``name`` in ``sf_dir``: the size of its
+    parquet file, or the total size of every file under its parquet
+    directory. The size gates on broadcasts and prefilters read it.
+
+    Raises ``FileNotFoundError`` when the table is missing: reading a
+    missing table as 0 bytes would silently pass every size gate."""
     path = table_path(sf_dir, name)
     if os.path.isdir(path):
         return sum(
@@ -137,10 +143,7 @@ def _table_bytes(sf_dir: str, name: str) -> int:
             for root, _, files in os.walk(path)
             for f in files
         )
-    try:
-        return os.path.getsize(path)
-    except OSError:
-        return 0
+    return os.path.getsize(path)
 
 
 def load_spread(
@@ -160,7 +163,7 @@ def load_spread(
     10× replication (≈50 MB, one parquet file → few scan tasks) the
     unspread kernel goes super-linear (measured 6-21× for 10× data)."""
     df = load_table(spark, sf_dir, name)
-    if min_bytes and _table_bytes(sf_dir, name) < min_bytes:
+    if min_bytes and table_bytes(sf_dir, name) < min_bytes:
         return df
     return spread(df, key=f"{sf_dir}/{name}")
 

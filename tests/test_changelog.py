@@ -2,7 +2,8 @@
 
 Covers the semantics the reference implements in lib/flink.py:21-131:
 op validation, arity checks, remove-by-value with warning on absent,
-keep-alive skipping, and the collapse ≡ incremental-fold invariant.
+keep-alive skipping, the collapse ≡ incremental-fold invariant, and
+the indexed table against the reference's list fold, order included.
 """
 
 from __future__ import annotations
@@ -113,3 +114,140 @@ def test_retract_then_reapply_is_identity():
     t2 = MaterializedTable(COLS, [["a", 1], ["b", 2]])
     t2.apply([rec(OP_UPDATE_BEFORE, "a", 1), rec(OP_UPDATE_AFTER, "a", 1)])
     assert t1 == t2
+
+
+# -- differential: the indexed table against the reference's list fold ------
+
+
+class ListFold:
+    """The reference's fold (``lib/flink.py:27-45``), kept as the oracle:
+    a retraction scans the list and removes the first equal row."""
+
+    def __init__(self, rows=None):
+        self.rows = [list(r) for r in (rows or [])]
+        self.absent = 0
+
+    def apply(self, records):
+        for r in records:
+            op = r.get("op", None)
+            if op in (OP_INSERT, OP_UPDATE_AFTER, None):
+                self.rows.append(list(r["row"]))
+            elif op in (OP_UPDATE_BEFORE, OP_DELETE):
+                try:
+                    self.rows.remove(list(r["row"]))
+                except ValueError:
+                    self.absent += 1
+            else:
+                raise ChangelogError(op)
+        return self
+
+
+NAN = float("nan")  # one object, as json.loads shares its NaN constant
+
+def _nested(c):
+    return (
+        st.lists(c, max_size=2)
+        | st.dictionaries(st.sampled_from(["k", "v"]), c, max_size=2)
+        | st.lists(c, max_size=2).map(tuple)
+    )
+
+
+# 1, 1.0 and True are equal (and hash equal) and must stay so; nested
+# lists and dicts are the shapes the HTTP API sends for array, struct
+# and map columns; tuples stand in for the Spark Rows of in-process
+# records, which list equality keeps apart from lists.
+_cells = st.recursive(
+    st.sampled_from([1, 1.0, True, 0, False, None, "a", "", NAN]),
+    _nested,
+    max_leaves=4,
+)
+
+
+@st.composite
+def _histories(draw):
+    pool = draw(st.lists(st.lists(_cells, min_size=2, max_size=2), min_size=1,
+                         max_size=6))
+    seed = draw(st.lists(st.sampled_from(pool), max_size=6))
+    ops = st.sampled_from(
+        [OP_INSERT, OP_UPDATE_BEFORE, OP_UPDATE_AFTER, OP_DELETE, None])
+    steps = draw(st.lists(st.tuples(ops, st.sampled_from(pool)), max_size=40))
+    records = [{"row": row} if op is None else {"op": op, "row": row}
+               for op, row in steps]
+    return seed, records
+
+
+class _Absent(logging.Handler):
+    def __init__(self):
+        super().__init__(logging.WARNING)
+        self.count = 0
+
+    def emit(self, record):
+        self.count += "absent" in record.getMessage()
+
+
+@settings(max_examples=400, deadline=None)
+@given(_histories())
+def test_rows_equal_list_fold_in_order(case):
+    seed, records = case
+    oracle = ListFold(seed).apply(records)
+    handler = _Absent()
+    logger = logging.getLogger("streamlit_flink_demo_spark.changelog")
+    logger.addHandler(handler)
+    try:
+        table = MaterializedTable(COLS, seed).apply(records)
+    finally:
+        logger.removeHandler(handler)
+    # repr tells 1, 1.0 and True apart, which == does not
+    assert repr(table.rows) == repr(oracle.rows)
+    assert table.rows == oracle.rows
+    assert len(table) == len(oracle.rows)
+    assert handler.count == oracle.absent
+
+    # the same history one record at a time, and through Changelog
+    stepwise = MaterializedTable(COLS, seed)
+    for r in records:
+        stepwise.apply([r])
+    assert repr(stepwise.rows) == repr(oracle.rows)
+    cl = Changelog(COLS, iter(records))
+    cl.consume(len(records) + 1)
+    assert repr(cl.collapse().rows) == repr(ListFold().apply(records).rows)
+
+
+def test_cells_equal_exactly_as_under_list_equality():
+    """Non-JSON cells: a tuple (a Spark Row) is not a list and a
+    frozenset of items is not a dict, but bytes equal a bytearray."""
+    seed = [[(1,), 0], [frozenset({("k", 1)}), 0], [bytearray(b"x"), 0]]
+    records = [rec(OP_DELETE, [1], 0), rec(OP_DELETE, {"k": 1}, 0),
+               rec(OP_DELETE, b"x", 0)]
+    oracle = ListFold(seed).apply(records)
+    assert oracle.rows == [[(1,), 0], [frozenset({("k", 1)}), 0]]
+    assert MaterializedTable(COLS, seed).apply(records).rows == oracle.rows
+
+
+def test_retraction_cost_does_not_grow_with_table_size():
+    """10 000 rows, 1 000 -U/+U pairs: a scan would compare each
+    retraction with thousands of rows; the index compares a few."""
+    eqs = [0]
+
+    class Cell:
+        def __init__(self, v):
+            self.v = v
+
+        def __hash__(self):
+            return hash(self.v)
+
+        def __eq__(self, other):
+            eqs[0] += 1
+            return isinstance(other, Cell) and self.v == other.v
+
+    keys = 10_000
+    table = MaterializedTable(COLS, [[Cell(k), 0] for k in range(keys)])
+    eqs[0] = 0
+    retractions = 1_000
+    for i in range(retractions):
+        k = (i * 7919) % keys  # 1 000 distinct keys
+        table.apply([rec(OP_UPDATE_BEFORE, Cell(k), 0),
+                     rec(OP_UPDATE_AFTER, Cell(k), 1)])
+    assert len(table) == keys
+    assert sum(r[1] for r in table.rows) == retractions
+    assert eqs[0] <= 10 * retractions

@@ -30,6 +30,7 @@ import re
 import secrets
 import threading
 import time
+from collections.abc import Iterator
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -185,25 +186,25 @@ def infer_key_cols_from_plan(df: Any) -> list[str] | None:
     event-time ``window()``/``session_window()`` keys (the analyzed
     plan groups on a plain attribute named ``window``).
 
-    For each output expression of the topmost Aggregate, the key set
-    collects its name when the expression (or the child it aliases)
-    semantically equals one of the grouping expressions. Returns None
-    when no Aggregate exists or the JVM walk fails (caller falls back
-    to the regex heuristic)."""
+    For each output expression of the topmost streaming Aggregate, the
+    key set collects its name when the expression (or the child it
+    aliases) semantically equals one of the grouping expressions.
+    Returns [] when no streaming Aggregate exists — an Aggregate on
+    the static side of a stream-static join keys nothing, and the
+    regex fallback would read its subquery's GROUP BY — and None only
+    when the JVM walk fails (caller falls back to the regex
+    heuristic)."""
     try:
-        node = df._jdf.queryExecution().analyzed()
-        stack = [node]
-        agg = None
-        while stack:
-            n = stack.pop()
-            if n.getClass().getSimpleName() == "Aggregate":
-                agg = n
-                break
-            children = n.children()
-            for i in range(children.length()):
-                stack.append(children.apply(i))
+        agg = next(
+            (
+                n
+                for n in _streaming_nodes(df)
+                if n.getClass().getSimpleName() == "Aggregate"
+            ),
+            None,
+        )
         if agg is None:
-            return None
+            return []
         groups = [
             agg.groupingExpressions().apply(i)
             for i in range(agg.groupingExpressions().length())
@@ -222,7 +223,7 @@ def infer_key_cols_from_plan(df: Any) -> list[str] | None:
 
 
 def _plan_has_aggregate(df: Any) -> bool:
-    """True when the analyzed plan carries an Aggregate. Used with
+    """True when the analyzed plan carries a streaming Aggregate. Used with
     keys == [] to detect the two shapes update-mode upserting cannot
     express: a GLOBAL aggregate (``SELECT count(*)`` — no GROUP BY),
     and a grouped aggregate whose grouping key is NOT in the output
@@ -239,7 +240,7 @@ def _plan_has_aggregate(df: Any) -> bool:
 
 
 def _plan_has_sort(df: Any) -> bool:
-    """True when the analyzed streaming plan carries a Sort (the
+    """True when the analyzed plan carries a streaming Sort (the
     continuous Top-N shape: ``GROUP BY … ORDER BY agg LIMIT k``).
     Spark only allows sorting a streaming aggregate in COMPLETE mode,
     and semantically that is also what Flink's Top-N operator emits —
@@ -250,18 +251,28 @@ def _plan_has_sort(df: Any) -> bool:
 
 def _plan_has_node(df: Any, names: tuple[str, ...]) -> bool:
     try:
-        node = df._jdf.queryExecution().analyzed()
-        stack = [node]
-        while stack:
-            n = stack.pop()
-            if n.getClass().getSimpleName() in names:
-                return True
-            children = n.children()
-            for i in range(children.length()):
-                stack.append(children.apply(i))
-        return False
+        return any(
+            n.getClass().getSimpleName() in names for n in _streaming_nodes(df)
+        )
     except Exception:
         return False
+
+
+def _streaming_nodes(df: Any) -> Iterator[Any]:
+    """The analyzed plan's streaming nodes, depth-first, parents before
+    children. Static subtrees (the dimension side of a stream-static
+    join) are pruned: they run once per batch as a plain batch query,
+    so their Aggregates and Sorts say nothing about the keys or the
+    output mode of the stream."""
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        n = stack.pop()
+        if not n.isStreaming():
+            continue
+        yield n
+        children = n.children()
+        for i in range(children.length()):
+            stack.append(children.apply(i))
 
 
 def infer_key_cols(sql: str, out_cols: list[str]) -> list[str]:
@@ -510,11 +521,11 @@ class StatementsService:
                 # Spark rejects streaming sorts outside complete mode,
                 # and Flink's Top-N semantics ARE the complete-mode
                 # snapshot diff — rows entering the ranking emit +I,
-                # rows falling out emit -D (see _plan_has_sort). The
-                # aggregate gate keeps batch-side ORDER BY subtrees
-                # (e.g. a sorted-LIMIT dim subquery in a stream-static
-                # join) from promoting a non-aggregate statement into
-                # a complete mode Spark would reject.
+                # rows falling out emit -D (see _plan_has_sort). Both
+                # checks see streaming plan nodes only, so a batch-side
+                # ORDER BY or GROUP BY (e.g. a dim subquery in a
+                # stream-static join) never promotes a non-aggregate
+                # statement into a complete mode Spark would reject.
                 output_mode = "complete"
             keyed_cap = os.environ.get("SPARK_GRAFT_KEYED_BATCH_CAP")
             keyless_cap = os.environ.get("SPARK_GRAFT_KEYLESS_BATCH_CAP")

@@ -457,6 +457,47 @@ def test_sink_path_allows_stream_static_join(spark, tmp_path):
         svc.stop(env["name"])
 
 
+def test_stream_static_join_keys_ignore_static_aggregate(spark, tmp_path):
+    """The GROUP BY inside the static side of a stream-static join runs
+    as a batch query; it must not key the append-only join stream.
+    Keying on the dim's eyeColor would fold nine joined rows into -U/+U
+    pairs and materialize three rows."""
+    import os
+
+    from streamlit_flink_demo_spark.changelog import Changelog
+    from streamlit_flink_demo_spark.sources.stream_fixtures import (
+        user_row,
+        user_stream,
+        write_user_batch,
+    )
+    from streamlit_flink_demo_spark.statements import StatementsService
+
+    spool = str(tmp_path / "spool")
+    os.makedirs(spool)
+    spark.createDataFrame(
+        [("brown",), ("brown",), ("blue",), ("green",)], "eyeColor string"
+    ).createOrReplaceTempView("eye_dim_rows")
+    user_stream(spark, spool).createOrReplaceTempView("user_ss_agg")
+    svc = StatementsService(spark)
+    env = svc.create(
+        "SELECT u.guid, u.eyeColor, d.n FROM user_ss_agg u JOIN "
+        "(SELECT eyeColor, count(*) AS n FROM eye_dim_rows GROUP BY eyeColor) d "
+        "ON u.eyeColor = d.eyeColor",
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    assert env["status"]["phase"] == "running", env["status"]["detail"]
+    try:
+        cols = [c["name"] for c in env["status"]["traits"]["schema"]["columns"]]
+        cl = Changelog(cols, svc.results(env["name"], continuous_query=True))
+        write_user_batch(spark, spool, 0, [user_row(i) for i in range(9)])
+        svc.process_available(env["name"])
+        recs = cl.consume(100)
+        assert [r["op"] for r in recs] == [0] * 9
+        assert len(cl.collapse().rows) == 9
+    finally:
+        svc.stop(env["name"])
+
+
 def test_runtime_failure_surfaces_in_phase(spark, tmp_path):
     """A streaming query that dies AFTER start (corrupt source file)
     must flip the statement to 'failed' with the error in the envelope

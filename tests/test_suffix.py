@@ -10,6 +10,8 @@ property of the final ranks.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -29,6 +31,27 @@ def _brute(rows: list[tuple[int, str]]) -> dict[tuple[int, int], int]:
     return {(d, p): i for i, (_, d, p) in enumerate(sfx)}
 
 
+def _longest_shared_prefix(rows: list[tuple[int, str]]) -> int:
+    sfx = sorted(text[p:] for _, text in rows for p in range(len(text)))
+    return max(len(os.path.commonprefix(pair)) for pair in zip(sfx, sfx[1:]))
+
+
+_DOC80 = "".join(chr(ord("a") + i * i % 23) for i in range(80))
+_PREFIX40 = _DOC80[:40]
+
+# Ties the _SA_SEED-char seed cannot resolve: only the doubling rounds
+# separate these suffixes, so each case must keep a shared prefix
+# longer than the seed (asserted in the test).
+_PAST_SEED_CASES = [
+    # two identical 80-char docs
+    [(1, _DOC80), (2, _DOC80)],
+    # one long periodic doc
+    [(1, "ab" * 50)],
+    # a 40-char shared prefix, then divergence
+    [(1, _PREFIX40 + "xyz"), (2, _PREFIX40 + "abc"), (3, _PREFIX40 + "q")],
+]
+
+
 @pytest.mark.parametrize(
     "rows",
     [
@@ -40,9 +63,12 @@ def _brute(rows: list[tuple[int, str]]) -> dict[tuple[int, int], int]:
         [(7, "aaaaaaaaaaaaaaaaaaaa"), (8, "aaaaaaaaab")],
         # mixed lengths around the seed boundary
         [(1, "xyzw"), (2, "xyzwxyzwxyzw"), (3, "xyzwxyzv")],
+        *_PAST_SEED_CASES,
     ],
 )
 def test_suffix_ranks_match_brute_force(spark, rows):
+    if rows in _PAST_SEED_CASES:
+        assert _longest_shared_prefix(rows) > _SA_SEED, "seed alone ranks it"
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
     got = {
         (r.doc_id, r.p): r.sa_rank
@@ -730,9 +756,10 @@ def test_indexed_repeat_probe_parity_after_boundary_tombstone(
     keys on rank VALUES, so a tombstone that removes a bucket-boundary
     rank (sa_rank % _ADJ_BUCKET == 0) must not drop the cross-bucket
     adjacent-survivor pair. Tombstone the document that OWNS a boundary
-    rank (falling back to the lowest doc_id when the corpus is smaller
-    than one bucket) and demand the artifact probe equals a fresh
-    longest-repeat computation over the survivors."""
+    rank and demand the artifact probe equals a fresh longest-repeat
+    computation over the survivors. The boundary row must exist (the
+    sf0.001 corpus spans many buckets); without it the tombstone would
+    miss the boundary and the test would pass without testing it."""
     from streamlit_flink_demo_spark.operators import incremental as inc
     from streamlit_flink_demo_spark.operators import similarity as sim
     from streamlit_flink_demo_spark.operators.suffix import (
@@ -756,12 +783,9 @@ def test_indexed_repeat_probe_parity_after_boundary_tombstone(
         .limit(1)
         .collect()
     )
+    assert boundary, f"corpus has no rank at a {_ADJ_BUCKET}-rank bucket boundary"
+    victim_id = boundary[0]["doc_id"]
     docs = load_table(spark, sf_dir, "documents")
-    victim_id = (
-        boundary[0]["doc_id"]
-        if boundary
-        else docs.agg(F.min("doc_id")).collect()[0][0]
-    )
     inc.tombstone_keys(
         path,
         "del:boundary",

@@ -16,6 +16,10 @@ from tests.test_oracle_parity import duck_con
 REG = load_all(exposed_only=False)
 ORACLE_QUERIES = sorted(n for n, rq in REG.items() if rq.oracle)
 
+# suites.py reads its members' oracles out of REGISTRY, so it is
+# imported only after load_all has registered every member.
+from streamlit_flink_demo_spark.plans.suites import _DUCKDB, SUITES  # noqa: E402
+
 
 @pytest.fixture(scope="module")
 def con(sf_dir):
@@ -51,3 +55,16 @@ def test_oracle_types_compatible(spark, sf_dir, con, name):
             pytest.fail(f"{name}.{col}: oracle {dt} vs Spark {st}")
         if dt == "DOUBLE" and st == "float":
             pytest.fail(f"{name}.{col}: oracle DOUBLE vs Spark float32")
+
+
+@pytest.mark.parametrize("name", sorted(SUITES))
+def test_suite_types_match_slot_schema(spark, sf_dir, con, name):
+    """Schema by construction: a generated suite's Spark dtypes and its
+    oracle's DuckDB types (read through the dialect shim) both equal
+    the spec's slot schema. Iterates the spec, so a new suite is
+    covered without touching this test."""
+    slots = SUITES[name].slots
+    rq = REG[name]
+    assert [(c, t.upper()) for c, t in rq.fn(spark, sf_dir).dtypes] == slots
+    duck = [(c, t) for c, t, *_ in con.execute("DESCRIBE " + rq.oracle).fetchall()]
+    assert duck == [(s, _DUCKDB.get(t, t)) for s, t in slots]

@@ -34,6 +34,7 @@ from collections.abc import Iterator
 from dataclasses import dataclass, field
 from typing import Any
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import SparkSession
 
 from streamlit_flink_demo_spark.streaming.emitter import (
@@ -326,6 +327,9 @@ class Statement:
         if self.emitter is not None and self.emitter.truncated_batches:
             trunc = f"truncated_batches={self.emitter.truncated_batches}"
             detail = f"{detail} {trunc}".strip()
+        if self.buffer.evicted_unread:
+            evicted = f"evicted_unread_records={self.buffer.evicted_unread}"
+            detail = f"{detail} {evicted}".strip()
         if self.emitter is not None:
             hw, warn = (
                 self.emitter.snapshot_high_water,
@@ -581,24 +585,64 @@ class StatementsService:
                     .foreachBatch(batch_target)
                     .queryName(stmt.name)
                 )
+                # Session confs the query's cloned session captures at
+                # start(); the parent session is restored afterwards.
+                start_conf = {
+                    "spark.sql.shuffle.partitions": str(
+                        self.stream_shuffle_partitions
+                    ),
+                    # Keep the state-store background snapshot out of
+                    # dashboard-statement lifetimes: the default 60 s
+                    # maintenance can land one multi-100-ms pause
+                    # inside a short-lived continuous query's latency
+                    # envelope. Recovery doesn't depend on snapshots
+                    # (deltas replay).
+                    "spark.sql.streaming.stateStore.maintenanceInterval": "600s",
+                }
                 if checkpoint_dir:
                     # Spark offsets/state checkpoint lives NEXT TO the
                     # emitter snapshot so restart recovery is
                     # consistent: Spark replays at most the last
                     # uncommitted batch, the emitter's batch-id dedup
-                    # makes re-emission exactly-once.
+                    # makes re-emission exactly-once. It keeps Spark's
+                    # default FileContext checkpoint manager, whose
+                    # non-overwriting rename is what detects a second
+                    # writer on a recovery checkpoint.
                     writer = writer.option(
                         "checkpointLocation", os.path.join(checkpoint_dir, "spark")
                     )
                 else:
-                    # Ephemeral statement (no recovery contract): put
-                    # the WAL/offset/state checkpoint on tmpfs when
-                    # available — the per-batch walCommit/commitOffsets
-                    # file dance is pure latency here, and a statement
-                    # without a caller-provided checkpoint_dir is
-                    # already non-recoverable (Spark would otherwise
-                    # use a throwaway dir under java.io.tmpdir).
-                    # Removed in stop().
+                    # Ephemeral statement (no recovery contract): its
+                    # WAL/offset/state checkpoint is a per-statement
+                    # dir with exactly one writer — on tmpfs when
+                    # available, else Spark's own throwaway dir under
+                    # java.io.tmpdir. Removed in stop().
+                    #
+                    # It runs on the FileSystem-based checkpoint
+                    # manager. Without libhadoop, Hadoop's local
+                    # filesystem has no native IO, so the default
+                    # FileContext manager forks a `readlink`
+                    # subprocess for every rename (getFileLinkStatus)
+                    # and a `chmod` for every create: ~40 process
+                    # spawns per microbatch across sources/, offsets/,
+                    # commits/ and state/, all on the trigger's
+                    # critical path. perfbench retract_drain --trace 1,
+                    # local[4], medians of 3 runs: latest_offset /
+                    # wal_commit / commit_offsets 44 / 37 / 38 ms →
+                    # 14 / 10 / 10 ms, trigger 379 → 274 ms. The
+                    # FileSystem manager's exists-then-rename is not
+                    # atomic against a second writer, which a
+                    # one-writer temp dir never has; durable
+                    # statements (above) and the streaming/*_ingest.py
+                    # pipelines, whose checkpoints a later run
+                    # recovers, keep FileContext. Checkpoint file
+                    # checksums stay on either way.
+                    start_conf[
+                        "spark.sql.streaming.checkpointFileManagerClass"
+                    ] = (
+                        "org.apache.spark.sql.execution.streaming."
+                        "checkpointing.FileSystemBasedCheckpointFileManager"
+                    )
                     shm = "/dev/shm"
                     if os.path.isdir(shm) and os.access(shm, os.W_OK):
                         import tempfile
@@ -610,70 +654,53 @@ class StatementsService:
                         writer = writer.option(
                             "checkpointLocation", stmt._tmp_ckpt
                         )
-                prev_parts = prev_maint = None
-                _START_CONF_LOCK.acquire()
-                try:
-                    prev_parts = self.spark.conf.get(
-                        "spark.sql.shuffle.partitions"
-                    )
-                    prev_maint = self.spark.conf.get(
-                        "spark.sql.streaming.stateStore.maintenanceInterval",
-                        None,
-                    )
-                    self.spark.conf.set(
-                        "spark.sql.shuffle.partitions",
-                        str(self.stream_shuffle_partitions),
-                    )
-                    # Keep the state-store background snapshot out of
-                    # dashboard-statement lifetimes: the default 60 s
-                    # maintenance can land one multi-100-ms pause inside
-                    # a short-lived continuous query's latency envelope.
-                    # Recovery doesn't depend on snapshots (deltas
-                    # replay).
-                    self.spark.conf.set(
-                        "spark.sql.streaming.stateStore.maintenanceInterval",
-                        "600s",
-                    )
-                    # start() clones the session; the clone keeps the
-                    # low partition count for the query's lifetime
+                with _START_CONF_LOCK:
+                    # None = not set on the parent: restored by unset,
+                    # so a default stays a default.
+                    prev = {k: self.spark.conf.get(k, None) for k in start_conf}
                     try:
-                        stmt._query = writer.start()
-                    except Exception as ex:
-                        if (
-                            sink_mode == "update"
-                            and "only in Append output mode" in str(ex)
-                        ):
-                            # Stream-stream joins reject update mode
-                            # (Spark's rule), and for a non-aggregate
-                            # plan append is semantically identical
-                            # for the emitter (no retractable state —
-                            # every row is new). Spark's start() is
-                            # the authority on which plans need this
-                            # (same policy as the sink.path NOTE), so
-                            # retry in append rather than guessing
-                            # from plan introspection.
-                            stmt._query = writer.outputMode(
-                                "append"
-                            ).start()
-                        else:
-                            raise
-                finally:
-                    try:
-                        if prev_parts is not None:
-                            self.spark.conf.set(
-                                "spark.sql.shuffle.partitions", prev_parts
-                            )
-                        if prev_maint is None:
-                            self.spark.conf.unset(
-                                "spark.sql.streaming.stateStore.maintenanceInterval"
-                            )
-                        else:
-                            self.spark.conf.set(
-                                "spark.sql.streaming.stateStore.maintenanceInterval",
-                                prev_maint,
-                            )
+                        for k, v in start_conf.items():
+                            self.spark.conf.set(k, v)
+                        # start() clones the session; the clone keeps
+                        # start_conf for the query's lifetime
+                        try:
+                            stmt._query = writer.start()
+                        except Exception as ex:
+                            if (
+                                sink_mode == "update"
+                                and "only in Append output mode" in str(ex)
+                            ):
+                                # Stream-stream joins reject update mode
+                                # (Spark's rule), and for a non-aggregate
+                                # plan append is semantically identical
+                                # for the emitter (no retractable state —
+                                # every row is new). Spark's start() is
+                                # the authority on which plans need this
+                                # (same policy as the sink.path NOTE), so
+                                # retry in append rather than guessing
+                                # from plan introspection.
+                                stmt._query = writer.outputMode(
+                                    "append"
+                                ).start()
+                            else:
+                                raise
+                        if not checkpoint_dir:
+                            # A file source builds its sources/ log from
+                            # the PARENT session's conf, in the query
+                            # thread, after start() returns: keep the
+                            # window open until the sources exist.
+                            try:
+                                stmt._query._jsq.streamingQuery().awaitInitialization(
+                                    30_000
+                                )
+                            except StreamingQueryException:
+                                pass  # died initializing: _sync_phase fails it
                     finally:
-                        _START_CONF_LOCK.release()
+                        for k, v in prev.items():
+                            if v is None:
+                                self.spark.conf.unset(k)
+                            else:
+                                self.spark.conf.set(k, v)
                 stmt.phase = PHASE_RUNNING
             except Exception as ex:
                 stmt.phase = PHASE_FAILED

@@ -139,6 +139,9 @@ class ResultBuffer:
         self._records: list[dict] = []
         self._base = 0
         self._max = max_records
+        # records a read skipped because eviction passed its cursor —
+        # changelog the reader never saw (surfaced in status.detail)
+        self.evicted_unread = 0
 
     def append(self, records: list[dict]) -> None:
         with self._lock:
@@ -150,6 +153,8 @@ class ResultBuffer:
 
     def read(self, offset: int, limit: int) -> tuple[list[dict], int]:
         with self._lock:
+            if offset < self._base:
+                self.evicted_unread += self._base - offset
             start = max(offset - self._base, 0)
             chunk = self._records[start : start + limit]
             return chunk, self._base + start + len(chunk)

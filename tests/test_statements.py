@@ -558,3 +558,182 @@ def test_create_rejects_live_name_collision(spark, tmp_path):
     # terminal phase → name reusable
     dup2 = svc.create("SELECT 1 AS one", name="clash-stmt")
     assert svc.wait_for_status(dup2, "completed", timeout=30) is not None
+
+
+def test_result_buffer_counts_evicted_unread_records():
+    """A reader that falls behind ring eviction gets the oldest records
+    still held; the records it never saw are counted and surfaced in
+    the statement's status detail, not skipped silently."""
+    from streamlit_flink_demo_spark.statements import Statement
+    from streamlit_flink_demo_spark.streaming.emitter import ResultBuffer
+
+    buf = ResultBuffer(max_records=5)
+    buf.append([{"row": [i]} for i in range(10)])
+    records, cursor = buf.read(0, 100)
+    assert [r["row"][0] for r in records] == [5, 6, 7, 8, 9]
+    assert cursor == 10
+    assert buf.evicted_unread == 5
+    stmt = Statement(name="lagged", sql="SELECT 1", properties={}, buffer=buf)
+    assert "evicted_unread_records=5" in stmt.envelope()["status"]["detail"]
+    buf.read(cursor, 100)  # a reader at the head skips nothing
+    assert buf.evicted_unread == 5
+
+
+_CKPT_FM = "org.apache.spark.sql.execution.streaming.checkpointing."
+
+
+def _checkpoint_managers(spark, stmt) -> tuple[str, str]:
+    """(manager a new checkpoint file gets under the query's session,
+    manager of the file source's sources/ log) for a running statement."""
+    se = stmt._query._jsq.streamingQuery()
+    jvm = spark._jvm
+    conf = se.sparkSessionForStream().sessionState().newHadoopConf()
+    path = jvm.org.apache.hadoop.fs.Path(se.resolvedCheckpointRoot())
+    fm = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    created = fm.CheckpointFileManager.create(path, conf)
+    # the source's log is a private field: find it by type
+    source = se.sources().head()
+    log_cls = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.execution.streaming.runtime.FileStreamSourceLog"
+    )
+    for f in source.getClass().getDeclaredFields():
+        if log_cls.isAssignableFrom(f.getType()):
+            f.setAccessible(True)
+            source_log = f.get(source)
+            break
+    return (
+        created.getClass().getName(),
+        source_log.fileManager().getClass().getName(),
+    )
+
+
+def test_ephemeral_statements_use_filesystem_checkpoint_manager(
+    spark, tmp_path
+):
+    """Ephemeral statements (no checkpoint_dir) write their one-writer
+    checkpoint through the FileSystem-based manager, which forks no
+    readlink/chmod-per-rename subprocess on a local filesystem without
+    native IO; a checkpoint_dir statement keeps FileContext, whose
+    non-overwriting rename detects a second writer on recovery."""
+    import os
+
+    from streamlit_flink_demo_spark.sources.stream_fixtures import user_stream
+    from streamlit_flink_demo_spark.statements import StatementsService
+
+    spool = str(tmp_path / "spool")
+    os.makedirs(spool)
+    user_stream(spark, spool).createOrReplaceTempView("user_ckpt_fm")
+    svc = StatementsService(spark)
+    sql = "SELECT eyeColor, count(*) AS n FROM user_ckpt_fm GROUP BY eyeColor"
+    eph = svc.create(sql)
+    dur = svc.create(sql, checkpoint_dir=str(tmp_path / "ckpt"))
+    try:
+        assert eph["status"]["phase"] == "running", eph["status"]["detail"]
+        assert dur["status"]["phase"] == "running", dur["status"]["detail"]
+        fs = _CKPT_FM + "FileSystemBasedCheckpointFileManager"
+        fc = _CKPT_FM + "FileContextBasedCheckpointFileManager"
+        assert _checkpoint_managers(spark, svc._statements[eph["name"]]) == (
+            fs,
+            fs,
+        )
+        assert _checkpoint_managers(spark, svc._statements[dur["name"]]) == (
+            fc,
+            fc,
+        )
+    finally:
+        svc.stop(eph["name"])
+        svc.stop(dur["name"])
+
+
+_START_KEYS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.stateStore.maintenanceInterval",
+    "spark.sql.streaming.checkpointFileManagerClass",
+)
+
+
+def _start_conf(spark) -> dict:
+    set_keys = spark.conf.getAll
+    return {k: (k in set_keys, spark.conf.get(k, None)) for k in _START_KEYS}
+
+
+def test_start_conf_window_restores_parent_session(spark, tmp_path):
+    """The confs a streaming create sets for its query's cloned session
+    read exactly as before on the parent session afterwards — after a
+    successful start and after a failed one — and a key that was unset
+    stays unset."""
+    import os
+
+    from streamlit_flink_demo_spark.sources.stream_fixtures import user_stream
+    from streamlit_flink_demo_spark.statements import StatementsService
+
+    spool = str(tmp_path / "spool")
+    os.makedirs(spool)
+    user_stream(spark, spool).createOrReplaceTempView("user_conf_window")
+    svc = StatementsService(spark, stream_shuffle_partitions=3)
+    before = _start_conf(spark)
+    assert before["spark.sql.streaming.checkpointFileManagerClass"] == (
+        False,
+        None,
+    )
+    sql = "SELECT eyeColor, count(*) AS n FROM user_conf_window GROUP BY eyeColor"
+    ok = svc.create(sql)
+    try:
+        assert ok["status"]["phase"] == "running", ok["status"]["detail"]
+        assert _start_conf(spark) == before
+    finally:
+        svc.stop(ok["name"])
+    failed = svc.create(sql, properties={"sink.path": str(tmp_path / "mat")})
+    assert failed["status"]["phase"] == "failed"
+    assert "append-only" in failed["status"]["detail"]
+    assert _start_conf(spark) == before
+
+
+def test_ephemeral_and_durable_statements_emit_the_same_changelog(
+    spark, tmp_path
+):
+    """The checkpoint manager is invisible in the output: the same spool
+    files through an ephemeral and a checkpoint_dir statement give the
+    same changelog, record for record, and the same collapsed table."""
+    import os
+
+    from streamlit_flink_demo_spark.changelog import Changelog
+    from streamlit_flink_demo_spark.sources.stream_fixtures import (
+        user_row,
+        user_stream,
+        write_user_batch,
+    )
+    from streamlit_flink_demo_spark.statements import StatementsService
+
+    spool = str(tmp_path / "spool")
+    os.makedirs(spool)
+    user_stream(spark, spool).createOrReplaceTempView("user_ckpt_diff")
+    svc = StatementsService(spark)
+    sql = (
+        "SELECT eyeColor, count(*) AS n, max(age) AS oldest "
+        "FROM user_ckpt_diff GROUP BY eyeColor"
+    )
+    envs = [svc.create(sql), svc.create(sql, checkpoint_dir=str(tmp_path / "c"))]
+    try:
+        logs = []
+        for env in envs:
+            assert env["status"]["phase"] == "running", env["status"]["detail"]
+            cols = [c["name"] for c in env["status"]["traits"]["schema"]["columns"]]
+            logs.append(
+                Changelog(cols, svc.results(env["name"], continuous_query=True))
+            )
+        for b in range(4):  # a priming file, then files that repeat keys
+            write_user_batch(
+                spark, spool, b, [user_row(b * 7 + i) for i in range(7)]
+            )
+            for env, cl in zip(envs, logs):
+                svc.process_available(env["name"])
+                cl.consume(1000)
+        eph, dur = logs
+        assert eph.history == dur.history
+        assert eph.ops_received.get("-U", 0) >= 6
+        assert eph.collapse().rows == dur.collapse().rows
+        assert len(eph.collapse().rows) == 3
+    finally:
+        for env in envs:
+            svc.stop(env["name"])

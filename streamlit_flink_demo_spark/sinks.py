@@ -179,23 +179,6 @@ class IdempotentParquetSink:
         per-batch summaries instead of re-executing the batch plan."""
         return os.path.join(self.path, f"batch_id={batch_id}")
 
-    def committed_batch_or(
-        self, spark: SparkSession, batch_id: int, fallback: DataFrame
-    ) -> DataFrame:
-        """The just-committed batch's durable directory as a frame, or
-        ``fallback`` (the batch plan) when a concurrently scheduled
-        sink compaction/fold already truncated the directory.
-
-        The returned frame is LAZY, so the isdir check alone cannot
-        close the race — a compaction can truncate the directory after
-        this returns and before the caller's action executes, and the
-        read then throws at action time. Callers that execute an
-        action over the result should use ``run_on_committed_batch``,
-        which retries the action on the fallback plan when the durable
-        read fails mid-flight."""
-        d = self.batch_dir(batch_id)
-        return spark.read.parquet(d) if os.path.isdir(d) else fallback
-
     def run_on_committed_batch(
         self, spark: SparkSession, batch_id: int, fallback: DataFrame, action
     ):

@@ -12,10 +12,11 @@ bucket-partitioned artifact (``cdc_index_path`` —
 operators/dedup.init_cdc_index; probes dynamic-partition-prune to the
 batch's hash buckets, re-resolved per batch so compaction deltas
 serve the NEXT batch without reattaching). Stateless per batch; no
-watermark, no state store. Coverage rows land exactly-once in an
-``IdempotentParquetSink``; ``on_summary`` fires one bounded digest
-per COMMITTED batch id (total/duplicated chars — the new-bytes rate a
-crawl monitor graphs). operators/compaction.compact_cdc_ingest folds
+watermark, no state store. Coverage rows land in an
+``IdempotentParquetSink`` under the delivery contract of
+``streaming/ingest.py``; the per-batch summary (chunk/duplicated
+chars — the new-bytes rate a crawl monitor graphs) fires once per
+COMMITTED batch id. operators/compaction.compact_cdc_ingest folds
 admitted documents' digests back into the artifact.
 """
 
@@ -31,8 +32,9 @@ from streamlit_flink_demo_spark.operators.dedup import (
     cdc_hash_rows,
 )
 from streamlit_flink_demo_spark.sinks import IdempotentParquetSink
-from streamlit_flink_demo_spark.streaming.dedup_ingest import (
-    _unpersist_on_termination,
+from streamlit_flink_demo_spark.streaming.ingest import (
+    land_and_summarize,
+    start_ingest,
 )
 
 
@@ -52,59 +54,33 @@ def attach_cdc_coverage_stream(
         raise ValueError(
             "pass exactly one of corpus_docs / cdc_index_path"
         )
+    index = None
     if cdc_index_path is None:
         index = cdc_hash_rows(corpus_docs).persist()
         index.count()  # materialize before the stream starts
-        persisted = [index]
-    else:
-        index = None
-        persisted = []
     sink = IdempotentParquetSink(out_path)
+    summary = {
+        "n_docs": F.count("*"),
+        "n_chunks": F.coalesce(F.sum("n_chunks"), F.lit(0)),
+        "dup_chars": F.coalesce(F.sum("dup_chars"), F.lit(0)),
+    }
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if index is not None:
-            idx = index
-        else:
+        idx = index
+        if idx is None:
+            # artifact mode: re-resolved per batch, so compaction
+            # deltas serve the NEXT batch without reattaching
             from streamlit_flink_demo_spark.operators.incremental import (
                 read_live_index,
             )
 
             idx = read_live_index(batch_df.sparkSession, cdc_index_path)
         rows = cdc_coverage_batch(batch_df, idx)
-        status = sink(rows, batch_id)
-        if on_summary is None or status != "committed":
-            return
-        # summarize from the durable batch directory — re-aggregating
-        # `rows` would run the digest probe join a second time.
-        # Retries on the batch plan if a concurrent compaction
-        # truncated the directory mid-read.
-        d = sink.run_on_committed_batch(
-            batch_df.sparkSession,
-            batch_id,
-            rows,
-            lambda df: df.agg(
-                F.count("*").alias("n_docs"),
-                F.sum("n_chunks").alias("n_chunks"),
-                F.sum("dup_chars").alias("dup_chars"),
-            ).first(),
-        )
-        on_summary(
-            {
-                "batch_id": batch_id,
-                "n_docs": d["n_docs"],
-                "n_chunks": int(d["n_chunks"] or 0),
-                "dup_chars": int(d["dup_chars"] or 0),
-            }
-        )
+        land_and_summarize(sink, rows, batch_id, on_summary, summary)
 
-    writer = doc_stream.writeStream.outputMode("append").foreachBatch(
-        on_batch
+    return start_ingest(
+        doc_stream,
+        on_batch,
+        checkpoint_dir,
+        None if index is None else [index],
     )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    query = writer.start()
-    if persisted:
-        _unpersist_on_termination(
-            doc_stream.sparkSession, query.id, persisted
-        )
-    return query

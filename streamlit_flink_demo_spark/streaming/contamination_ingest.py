@@ -27,24 +27,22 @@ scanning the full gram set. No streaming state store: the operator is
 stateless per batch (no watermark, no snapshot growth) and restart
 safety reduces to the sink's batch-id dedup.
 
-Flag delivery: identical contract to ``dedup_ingest`` — flag rows land
-DISTRIBUTED in an ``IdempotentParquetSink`` (exactly-once by batch
-id), the optional ``on_summary`` callback sees one bounded digest row
-per COMMITTED batch, and the persisted train grams are unpersisted
-when the query terminates.
+Flag delivery: flag rows land in an ``IdempotentParquetSink`` under
+the delivery contract of ``streaming/ingest.py``; the persisted train
+grams are unpersisted when the query terminates.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from streamlit_flink_demo_spark.sinks import IdempotentParquetSink
-from streamlit_flink_demo_spark.streaming.dedup_ingest import (
-    _unpersist_on_termination,
+from streamlit_flink_demo_spark.streaming.ingest import (
+    land_and_summarize,
+    start_ingest,
 )
 
 # Same threshold as operators/suffix._CONTAM_T: a position counts as
@@ -114,49 +112,28 @@ def attach_contamination_stream(
 ):
     """Wire a (doc_id, text) eval-document stream through per-batch
     exact contamination screening. ``train_docs`` is gram-indexed ONCE
-    and persisted (the artifact role). Flag rows are written
-    DISTRIBUTED to an ``IdempotentParquetSink`` at ``flags_path``
-    (exactly-once by batch id); ``on_summary``, if given, receives a
-    bounded one-row digest per COMMITTED batch:
+    and persisted (the artifact role). Flag rows land at
+    ``flags_path`` under the delivery contract of
+    ``streaming/ingest.py``; ``on_summary``, if given, receives per
+    COMMITTED batch:
 
         {"batch_id": int, "n_docs": int, "n_flagged": int}
 
-    and never re-fires for a replayed batch. Returns the started
+    Returns the started
     StreamingQuery; the persisted gram frame unpersists on query
     termination."""
     train_grams = corpus_train_grams(train_docs).persist()
     train_grams.count()  # materialize before the stream starts
     sink = IdempotentParquetSink(flags_path)
+    summary = {
+        "n_docs": F.count("*"),
+        "n_flagged": F.coalesce(
+            F.sum(F.col("contaminated").cast("int")), F.lit(0)
+        ),
+    }
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         flags = contamination_flags_batch(batch_df, train_grams)
-        status = sink(flags, batch_id)
-        if on_summary is None or status != "committed":
-            return
-        bdir = os.path.join(flags_path, f"batch_id={batch_id}")
-        row = (
-            batch_df.sparkSession.read.parquet(bdir)
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum(F.col("contaminated").cast("int")).alias("n_flagged"),
-            )
-            .first()
-        )
-        on_summary(
-            {
-                "batch_id": batch_id,
-                "n_docs": row["n_docs"],
-                "n_flagged": int(row["n_flagged"] or 0),
-            }
-        )
+        land_and_summarize(sink, flags, batch_id, on_summary, summary)
 
-    writer = doc_stream.writeStream.outputMode("append").foreachBatch(
-        on_batch
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    query = writer.start()
-    _unpersist_on_termination(
-        doc_stream.sparkSession, query.id, [train_grams]
-    )
-    return query
+    return start_ingest(doc_stream, on_batch, checkpoint_dir, [train_grams])

@@ -19,13 +19,10 @@ No streaming state store is involved at all — the operator is
 stateless per batch, so there is no watermark, no snapshot growth,
 and restart safety reduces to the sink's batch-id dedup.
 
-Flag delivery (reworked round 9, VERDICT r8 item 4): flag rows land in
-an ``IdempotentParquetSink`` — a DISTRIBUTED parquet write with
-batch-id exactly-once, never a driver collect (the previous design
-funneled every batch's flag rows through ``flags.collect()``, a driver
-bottleneck at any real ingest rate). The optional ``on_summary``
-callback receives a BOUNDED per-batch digest (one aggregate row:
-document/flagged counts) — the only driver-side data on the hot path.
+Flag delivery: flag rows land in an ``IdempotentParquetSink`` — a
+DISTRIBUTED parquet write, exactly-once by batch id, never a driver
+collect — under the delivery contract of ``streaming/ingest.py``; the
+one-row summary is the only driver-side data on the hot path.
 Consumers read the full flags exactly-once via
 ``IdempotentParquetSink(flags_path).read_committed(spark)``.
 """
@@ -45,6 +42,10 @@ from streamlit_flink_demo_spark.operators.dedup import (
     minhash_signatures,
 )
 from streamlit_flink_demo_spark.sinks import IdempotentParquetSink
+from streamlit_flink_demo_spark.streaming.ingest import (
+    land_and_summarize,
+    start_ingest,
+)
 
 
 def near_dup_flags_batch(
@@ -139,116 +140,68 @@ def attach_near_dup_stream(
     the persisted artifact at ``sig_index_path`` (init_minhash_index;
     pass ``corpus_docs=None``), whose compaction deltas
     (operators/compaction.compact_dedup_ingest) are picked up on the
-    next batch without reattaching. Flag rows are written DISTRIBUTED to an
-    ``IdempotentParquetSink`` at ``flags_path`` (exactly-once by batch
-    id — a replayed batch after restart rewrites nothing); the full
-    flag stream never touches the driver. ``on_summary``, if given,
-    receives a bounded one-row digest per batch:
+    next batch without reattaching. Flag rows (doc_id, dup_of,
+    est_jaccard) land at ``flags_path`` under the delivery contract of
+    ``streaming/ingest.py``; ``on_summary``, if given, receives per
+    COMMITTED batch:
 
         {"batch_id": int, "n_docs": int, "n_flagged": int}
 
-    aggregated from the batch's flag frame, and fires EXACTLY ONCE
-    per batch id: a replayed already-committed batch (restart
-    recovery) skips its summary entirely — the sink reports the
-    replay, so a consumer accumulating counts across restarts never
-    double-counts. Returns the started StreamingQuery; the persisted
-    corpus frames are unpersisted automatically when the query
-    terminates (a ``StreamingQueryListener`` keyed on the query id),
-    so repeated attach/stop cycles in one session don't accumulate
-    cached corpus-signature copies."""
+    Returns the started StreamingQuery; the persisted corpus frames
+    are unpersisted when the query terminates, so repeated attach/stop
+    cycles in one session don't accumulate cached corpus-signature
+    copies."""
     if (corpus_docs is None) == (sig_index_path is None):
         raise ValueError(
             "pass exactly one of corpus_docs / sig_index_path"
         )
-    live_frames: list = []  # mutated on re-resolve; cleaned at stop
+    # The cached (sigs, bands) pair. Artifact mode fills it on the
+    # first batch and swaps it whenever the artifact's delta count
+    # changes (one driver-side meta read per batch), so a compaction
+    # fold committed mid-stream serves the NEXT batch without
+    # reattaching. The termination listener reads this LIVE list.
+    live_frames: list = []
+    n_deltas = -1
 
-    def _persist_pair(sigs_src: DataFrame):
+    def _swap_in(sigs_src: DataFrame) -> None:
+        for f in live_frames:
+            f.unpersist()
         sigs = sigs_src.persist()
         bands = sigs.select(
             F.col("doc_id").alias("old_doc"),
             F.explode(_band_keys_col()).alias("band_key"),
         ).persist()
         bands.count()  # materialize before serving batches
-        return sigs, bands
+        live_frames[:] = [sigs, bands]
 
     if sig_index_path is None:
-        corpus_sigs, corpus_bands = _persist_pair(
-            minhash_signatures(corpus_docs)
-        )
-        live_frames.extend([corpus_sigs, corpus_bands])
-        state = None
-    else:
-        # Artifact mode: persisted copies are re-resolved whenever the
-        # artifact's delta count changes (one driver-side meta read
-        # per batch), so a compaction fold committed mid-stream serves
-        # the NEXT batch without reattaching.
-        state = {"n_deltas": -1, "sigs": None, "bands": None}
+        _swap_in(minhash_signatures(corpus_docs))
 
     def _resolve(spark):
-        if state is None:
-            return corpus_sigs, corpus_bands
-        from streamlit_flink_demo_spark.operators.incremental import (
-            _read_meta,
-            read_index_data,
-        )
-
-        n = len(
-            _read_meta(os.path.realpath(sig_index_path)).get("deltas", [])
-        )
-        if n != state["n_deltas"]:
-            for f in live_frames:
-                f.unpersist()
-            live_frames.clear()
-            sigs, bands = _persist_pair(
-                read_index_data(spark, sig_index_path)
+        nonlocal n_deltas
+        if sig_index_path is not None:
+            from streamlit_flink_demo_spark.operators.incremental import (
+                _read_meta,
+                read_index_data,
             )
-            live_frames.extend([sigs, bands])
-            state.update(n_deltas=n, sigs=sigs, bands=bands)
-        return state["sigs"], state["bands"]
+
+            n = len(
+                _read_meta(os.path.realpath(sig_index_path)).get("deltas", [])
+            )
+            if n != n_deltas:
+                _swap_in(read_index_data(spark, sig_index_path))
+                n_deltas = n
+        return live_frames
 
     sink = IdempotentParquetSink(flags_path)
+    summary = {"n_docs": F.count("*"), "n_flagged": F.count("dup_of")}
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         sigs, bands = _resolve(batch_df.sparkSession)
         flags = near_dup_flags_batch(batch_df, sigs, bands)
-        status = sink(flags, batch_id)
-        if on_summary is None or status != "committed":
-            # replays are already durable AND already summarized by
-            # the run that committed them — exactly-once, not
-            # at-least-once, for the digest too.
-            return
-        # summarize from the durable batch directory — re-aggregating
-        # `flags` would run the signature join a second time. Retries
-        # on the batch plan if a concurrent compaction truncated the
-        # directory mid-read (run_on_committed_batch closes the TOCTOU
-        # window a bare isdir check leaves open).
-        row = sink.run_on_committed_batch(
-            batch_df.sparkSession,
-            batch_id,
-            flags,
-            lambda df: df.agg(
-                F.count("*").alias("n_docs"),
-                F.count("dup_of").alias("n_flagged"),
-            ).first(),
-        )
-        on_summary(
-            {
-                "batch_id": batch_id,
-                "n_docs": row["n_docs"],
-                "n_flagged": row["n_flagged"],
-            }
-        )
+        land_and_summarize(sink, flags, batch_id, on_summary, summary)
 
-    writer = doc_stream.writeStream.outputMode("append").foreachBatch(
-        on_batch
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    query = writer.start()
-    # live_frames is the LIVE list (artifact-mode re-resolves swap its
-    # contents); the listener unpersists whatever is cached at stop.
-    _unpersist_on_termination(doc_stream.sparkSession, query.id, live_frames)
-    return query
+    return start_ingest(doc_stream, on_batch, checkpoint_dir, live_frames)
 
 
 # --------------------------------------------------------------------------
@@ -355,78 +308,16 @@ def attach_semantic_dedup_stream(
 ):
     """Semantic twin of ``attach_near_dup_stream``: arriving documents
     are encoded in-plan and flagged against the attach-time corpus
-    embedding buckets. Identical delivery contract — distributed
-    exactly-once flags via ``IdempotentParquetSink``, one bounded
-    summary per COMMITTED batch id, corpus frames unpersisted on query
+    embedding buckets. Same delivery contract (``streaming/ingest.py``)
+    and summary keys; the corpus frame is unpersisted on query
     termination."""
     corpus_emb = corpus_embedding_buckets(corpus_docs).persist()
     corpus_emb.count()  # materialize before the stream starts
     sink = IdempotentParquetSink(flags_path)
+    summary = {"n_docs": F.count("*"), "n_flagged": F.count("dup_of")}
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         flags = semantic_dup_flags_batch(batch_df, corpus_emb, tau)
-        status = sink(flags, batch_id)
-        if on_summary is None or status != "committed":
-            return
-        # summarize from the durable batch directory, not the plan;
-        # retries on the plan if a compaction truncated the dir.
-        row = sink.run_on_committed_batch(
-            batch_df.sparkSession,
-            batch_id,
-            flags,
-            lambda df: df.agg(
-                F.count("*").alias("n_docs"),
-                F.count("dup_of").alias("n_flagged"),
-            ).first(),
-        )
-        on_summary(
-            {
-                "batch_id": batch_id,
-                "n_docs": row["n_docs"],
-                "n_flagged": row["n_flagged"],
-            }
-        )
+        land_and_summarize(sink, flags, batch_id, on_summary, summary)
 
-    writer = doc_stream.writeStream.outputMode("append").foreachBatch(
-        on_batch
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    query = writer.start()
-    _unpersist_on_termination(
-        doc_stream.sparkSession, query.id, [corpus_emb]
-    )
-    return query
-
-
-def _unpersist_on_termination(spark, query_id, frames) -> None:
-    """Register a one-shot ``StreamingQueryListener`` that unpersists
-    ``frames`` when the query with ``query_id`` terminates (stop or
-    failure), then removes itself — long-lived sessions that attach
-    and stop many ingest streams don't leak cached corpus frames."""
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    class _Cleanup(StreamingQueryListener):
-        def onQueryStarted(self, event):
-            pass
-
-        def onQueryProgress(self, event):
-            pass
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            if str(event.id) != str(query_id):
-                return
-            for f in frames:
-                try:
-                    f.unpersist()
-                except Exception:
-                    pass  # session already stopped — nothing cached
-            try:
-                spark.streams.removeListener(self)
-            except Exception:
-                pass
-
-    spark.streams.addListener(_Cleanup())
+    return start_ingest(doc_stream, on_batch, checkpoint_dir, [corpus_emb])

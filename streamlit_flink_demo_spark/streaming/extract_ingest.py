@@ -11,16 +11,11 @@ batch operator applied per micro-batch — no state store, no
 watermark, stream ≡ batch twin by construction (pinned in
 tests/test_extract_ingest.py).
 
-Delivery contract (the door-check family's):
-- extracted rows (doc_id, n_lines_raw, n_lines_kept, extract_text)
-  land DISTRIBUTED in an ``IdempotentParquetSink`` — exactly-once by
-  batch id across restart replays;
-- the optional ``on_summary`` sees one bounded digest per COMMITTED
-  batch — aggregated from the just-committed durable batch directory
-  (never by re-executing the batch plan);
-- rows the boilerplate filter empties out (n_lines_kept = 0) still
-  land, carrying their accounting: dropping documents is the quality
-  GATE's decision, not the extractor's.
+Extracted rows (doc_id, n_lines_raw, n_lines_kept, extract_text) land
+in an ``IdempotentParquetSink`` under the door-check family's delivery
+contract (``streaming/ingest.py``). Rows the boilerplate filter empties
+out (n_lines_kept = 0) still land, carrying their accounting: dropping
+documents is the quality GATE's decision, not the extractor's.
 
 At 100 TB: the extraction itself is one map-only JVM projection
 (whole-stage codegen, no shuffle — tests/test_plans.py pins the batch
@@ -37,6 +32,10 @@ from pyspark.sql import functions as F
 
 from streamlit_flink_demo_spark.operators.extract import extract_text
 from streamlit_flink_demo_spark.sinks import IdempotentParquetSink
+from streamlit_flink_demo_spark.streaming.ingest import (
+    land_and_summarize,
+    start_ingest,
+)
 
 
 def extract_batch(batch_docs: DataFrame, html_col: str = "html") -> DataFrame:
@@ -64,39 +63,16 @@ def attach_extract_stream(
     and never re-fires for a replayed batch. Returns the started
     StreamingQuery."""
     sink = IdempotentParquetSink(out_path)
+    summary = {
+        "n_docs": F.count("*"),
+        "n_boilerplate_only": F.coalesce(
+            F.sum((F.col("n_lines_kept") == 0).cast("int")), F.lit(0)
+        ),
+        "chars_kept": F.coalesce(F.sum(F.length("extract_text")), F.lit(0)),
+    }
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         rows = extract_batch(batch_df, html_col=html_col)
-        status = sink(rows, batch_id)
-        if on_summary is None or status != "committed":
-            return
-        # Durable-dir summary with retry-on-fallback: a concurrent
-        # compaction truncating the batch dir mid-read must not kill
-        # the stream (run_on_committed_batch re-runs on the plan).
-        d = sink.run_on_committed_batch(
-            batch_df.sparkSession,
-            batch_id,
-            rows,
-            lambda df: df.agg(
-                F.count("*").alias("n_docs"),
-                F.sum((F.col("n_lines_kept") == 0).cast("int")).alias(
-                    "n_boilerplate_only"
-                ),
-                F.sum(F.length("extract_text")).alias("chars_kept"),
-            ).first(),
-        )
-        on_summary(
-            {
-                "batch_id": batch_id,
-                "n_docs": d["n_docs"],
-                "n_boilerplate_only": int(d["n_boilerplate_only"] or 0),
-                "chars_kept": int(d["chars_kept"] or 0),
-            }
-        )
+        land_and_summarize(sink, rows, batch_id, on_summary, summary)
 
-    writer = doc_stream.writeStream.outputMode("append").foreachBatch(
-        on_batch
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return start_ingest(doc_stream, on_batch, checkpoint_dir)

@@ -43,10 +43,11 @@ existing ``compact_sink``/fold ledger machinery.
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from streamlit_flink_demo_spark.operators.extract import (
@@ -54,6 +55,10 @@ from streamlit_flink_demo_spark.operators.extract import (
     url_host,
 )
 from streamlit_flink_demo_spark.sinks import IdempotentParquetSink
+from streamlit_flink_demo_spark.streaming.ingest import (
+    land_and_summarize,
+    start_ingest,
+)
 
 # url-hash bucket count for the seen-index partitioning: bounded file
 # count at small scale, constant expected bucket width at any scale
@@ -101,6 +106,35 @@ def new_urls_batch(batch_canon: DataFrame, seen: DataFrame) -> DataFrame:
     )
 
 
+def seen_rows(
+    batch: DataFrame,
+    sink: IdempotentParquetSink,
+    index_path: str | None,
+    cols: tuple[str, ...],
+) -> DataFrame | None:
+    """``cols`` of every row already seen in the url-hash buckets of
+    ``batch`` (which carries ``b``): the base index at ``index_path``
+    plus the sink's committed output, both pruned to those buckets.
+    None when neither exists yet (no base index, first batch)."""
+    spark = batch.sparkSession
+    parts = []
+    if index_path is not None and os.path.isdir(index_path):
+        parts.append(spark.read.parquet(index_path))
+    try:
+        parts.append(sink.read_committed(spark))
+    except ValueError:
+        pass  # first batch: nothing committed yet
+    if not parts:
+        return None
+    # bucket list is bounded by the batch's distinct URLs; isin() over
+    # it prunes the base index's partitions.
+    bs = [r["b"] for r in batch.select("b").distinct().collect()]
+    return functools.reduce(
+        DataFrame.unionByName,
+        [p.where(F.col("b").isin(bs)).select(*cols) for p in parts],
+    )
+
+
 def init_frontier_index(urls: DataFrame, path: str) -> str:
     """Persist the standing seen-URL index: (b, url) parquet
     partitioned by bucket, so per-batch probes prune to the buckets
@@ -137,63 +171,23 @@ def attach_frontier_stream(
     and never re-fires for a replayed batch. Returns the started
     StreamingQuery."""
     sink = IdempotentParquetSink(out_path)
+    summary = {"n_new": F.count("*"), "n_hosts": F.countDistinct("host")}
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         canon = canon_urls_batch(batch_df, url_col=url_col).persist()
         try:
-            # bucket list is bounded by the batch's distinct URLs;
-            # isin() over it prunes the base index's partitions.
-            bs = [r["b"] for r in canon.select("b").distinct().collect()]
-            seen_parts = []
-            if index_path is not None and os.path.isdir(index_path):
-                seen_parts.append(
-                    spark.read.parquet(index_path)
-                    .where(F.col("b").isin(bs))
-                    .select("b", "url")
-                )
-            try:
-                prior = sink.read_committed(spark)
-            except ValueError:
-                prior = None  # first batch: nothing committed yet
-            if prior is not None:
-                seen_parts.append(
-                    prior.where(F.col("b").isin(bs)).select("b", "url")
-                )
-            if seen_parts:
-                seen = seen_parts[0]
-                for p in seen_parts[1:]:
-                    seen = seen.unionByName(p)
-                new = new_urls_batch(canon, seen)
-            else:
-                new = canon
+            seen = seen_rows(canon, sink, index_path, ("b", "url"))
+            new = canon if seen is None else new_urls_batch(canon, seen)
             rows = new.select("host", "url", "b", "n_refs")
-            status = sink(rows, batch_id)
-            if on_summary is None or status != "committed":
-                return
-            d = sink.run_on_committed_batch(
-                spark,
-                batch_id,
+            land_and_summarize(
+                sink,
                 rows,
-                lambda df: df.agg(
-                    F.count("*").alias("n_new"),
-                    F.countDistinct("host").alias("n_hosts"),
-                ).first(),
-            )
-            on_summary(
-                {
-                    "batch_id": batch_id,
-                    "n_urls": canon.count(),
-                    "n_new": int(d["n_new"] or 0),
-                    "n_hosts": int(d["n_hosts"] or 0),
-                }
+                batch_id,
+                on_summary,
+                summary,
+                extra=lambda: {"n_urls": canon.count()},
             )
         finally:
             canon.unpersist()
 
-    writer = link_stream.writeStream.outputMode("append").foreachBatch(
-        on_batch
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return start_ingest(link_stream, on_batch, checkpoint_dir)

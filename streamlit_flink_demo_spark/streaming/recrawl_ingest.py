@@ -46,7 +46,6 @@ function).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
@@ -58,7 +57,14 @@ from streamlit_flink_demo_spark.operators.extract import (
     url_host,
 )
 from streamlit_flink_demo_spark.sinks import IdempotentParquetSink
-from streamlit_flink_demo_spark.streaming.frontier_ingest import url_bucket
+from streamlit_flink_demo_spark.streaming.frontier_ingest import (
+    seen_rows,
+    url_bucket,
+)
+from streamlit_flink_demo_spark.streaming.ingest import (
+    land_and_summarize,
+    start_ingest,
+)
 
 _STATE_COLS = ("b", "url", "n_fetches", "n_changes", "last_digest", "seq")
 
@@ -203,81 +209,43 @@ def attach_recrawl_stream(
     and never re-fires for a replayed batch. Returns the started
     StreamingQuery."""
     sink = IdempotentParquetSink(out_path)
+    summary = {
+        "n_urls": F.count("*"),
+        "n_new": F.coalesce(
+            F.sum((F.col("n_fetches") == 1).cast("bigint")), F.lit(0)
+        ),
+        "n_changed_ever": F.coalesce(
+            F.sum(
+                ((F.col("n_fetches") > 1) & (F.col("n_changes") > 0)).cast(
+                    "bigint"
+                )
+            ),
+            F.lit(0),
+        ),
+    }
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         obs = fetch_obs_batch(
             batch_df, url_col=url_col, digest_col=digest_col
         ).persist()
         try:
-            bs = [r["b"] for r in obs.select("b").distinct().collect()]
-            keys = obs.select("b", "url")
-            seen_parts = []
-            if index_path is not None and os.path.isdir(index_path):
-                seen_parts.append(
-                    spark.read.parquet(index_path)
-                    .where(F.col("b").isin(bs))
-                    .select(*_STATE_COLS)
-                )
-            try:
-                prior_deltas = sink.read_committed(spark)
-            except ValueError:
-                prior_deltas = None  # first batch: nothing committed
-            if prior_deltas is not None:
-                seen_parts.append(
-                    prior_deltas.where(F.col("b").isin(bs)).select(
-                        *_STATE_COLS
-                    )
-                )
-            if seen_parts:
-                seen = seen_parts[0]
-                for part in seen_parts[1:]:
-                    seen = seen.unionByName(part)
-                hits = seen.join(
-                    F.broadcast(keys), ["b", "url"], "left_semi"
-                )
-                prior = latest_state(hits)
-            else:
-                prior = spark.createDataFrame(
+            seen = seen_rows(obs, sink, index_path, _STATE_COLS)
+            if seen is None:
+                prior = batch_df.sparkSession.createDataFrame(
                     [],
                     "b int, url string, n_fetches bigint, "
                     "n_changes bigint, last_digest string, seq bigint",
                 )
+            else:
+                hits = seen.join(
+                    F.broadcast(obs.select("b", "url")),
+                    ["b", "url"],
+                    "left_semi",
+                )
+                prior = latest_state(hits)
             upd = update_state_batch(obs, prior, seq=batch_id)
-            status = sink(upd, batch_id)
-            if on_summary is None or status != "committed":
-                return
-            d = sink.run_on_committed_batch(
-                spark,
-                batch_id,
-                upd,
-                lambda df: df.agg(
-                    F.count("*").alias("n_urls"),
-                    F.sum(
-                        (F.col("n_fetches") == 1).cast("bigint")
-                    ).alias("n_new"),
-                    F.sum(
-                        (
-                            (F.col("n_fetches") > 1)
-                            & (F.col("n_changes") > 0)
-                        ).cast("bigint")
-                    ).alias("n_changed_ever"),
-                ).first(),
-            )
-            on_summary(
-                {
-                    "batch_id": batch_id,
-                    "n_urls": int(d["n_urls"] or 0),
-                    "n_new": int(d["n_new"] or 0),
-                    "n_changed_ever": int(d["n_changed_ever"] or 0),
-                }
-            )
+            land_and_summarize(sink, upd, batch_id, on_summary, summary)
         finally:
             obs.unpersist()
 
-    writer = fetch_stream.writeStream.outputMode("append").foreachBatch(
-        on_batch
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return start_ingest(fetch_stream, on_batch, checkpoint_dir)

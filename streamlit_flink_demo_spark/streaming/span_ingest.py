@@ -27,10 +27,9 @@ the landed ``clean_text`` rows in as index deltas, after which later
 batches ARE cleaned against earlier ingested documents). No streaming
 state store: stateless per batch; restart safety is the sink's
 batch-id dedup. Rewrite rows — accounting PLUS the cleaned text
-itself (the ingest product) — land DISTRIBUTED in an
-``IdempotentParquetSink`` (exactly-once by batch id); the optional
-``on_summary`` sees one bounded digest per COMMITTED batch; an
-in-session index unpersists on query termination.
+itself (the ingest product) — land in an ``IdempotentParquetSink``
+under the delivery contract of ``streaming/ingest.py``; an in-session
+index unpersists on query termination.
 """
 
 from __future__ import annotations
@@ -46,8 +45,9 @@ from streamlit_flink_demo_spark.operators.suffix import (  # noqa: F401
     span_rewrite_batch,  # re-export; shared batch/stream rewrite
 )
 from streamlit_flink_demo_spark.sinks import IdempotentParquetSink
-from streamlit_flink_demo_spark.streaming.dedup_ingest import (
-    _unpersist_on_termination,
+from streamlit_flink_demo_spark.streaming.ingest import (
+    land_and_summarize,
+    start_ingest,
 )
 
 
@@ -83,14 +83,18 @@ def attach_span_rewrite_stream(
         raise ValueError(
             "pass exactly one of corpus_docs / gram_index_path"
         )
+    index = None
     if gram_index_path is None:
         index = corpus_span_index(corpus_docs).persist()
         index.count()  # materialize before the stream starts
-        persisted = [index]
-    else:
-        index = None
-        persisted = []
     sink = IdempotentParquetSink(out_path)
+    summary = {
+        "n_docs": F.count("*"),
+        "n_rewritten": F.coalesce(
+            F.sum((F.col("n_spans_removed") > 0).cast("int")), F.lit(0)
+        ),
+        "chars_removed": F.coalesce(F.sum("chars_removed"), F.lit(0)),
+    }
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         # Artifact mode re-resolves per batch (one driver-side
@@ -102,44 +106,11 @@ def attach_span_rewrite_stream(
             else read_gram_index(batch_df.sparkSession, gram_index_path)
         )
         rows = span_rewrite_batch(batch_df, idx)
-        status = sink(rows, batch_id)
-        if on_summary is None or status != "committed":
-            return
-        # Summarize from the just-committed durable batch directory,
-        # not the unmaterialized plan — re-aggregating `rows` would
-        # run the whole gram-join/window/LCP rewrite a second time.
-        # run_on_committed_batch retries on the batch plan if a
-        # concurrent sink compaction truncated the directory between
-        # commit and this aggregation (the TOCTOU window).
-        d = sink.run_on_committed_batch(
-            batch_df.sparkSession,
-            batch_id,
-            rows,
-            lambda df: df.agg(
-                F.count("*").alias("n_docs"),
-                F.sum((F.col("n_spans_removed") > 0).cast("int")).alias(
-                    "n_rewritten"
-                ),
-                F.sum("chars_removed").alias("chars_removed"),
-            ).first(),
-        )
-        on_summary(
-            {
-                "batch_id": batch_id,
-                "n_docs": d["n_docs"],
-                "n_rewritten": int(d["n_rewritten"] or 0),
-                "chars_removed": int(d["chars_removed"] or 0),
-            }
-        )
+        land_and_summarize(sink, rows, batch_id, on_summary, summary)
 
-    writer = doc_stream.writeStream.outputMode("append").foreachBatch(
-        on_batch
+    return start_ingest(
+        doc_stream,
+        on_batch,
+        checkpoint_dir,
+        None if index is None else [index],
     )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    query = writer.start()
-    if persisted:
-        _unpersist_on_termination(
-            doc_stream.sparkSession, query.id, persisted
-        )
-    return query

@@ -45,6 +45,7 @@ from streamlit_flink_demo_spark.operators.incremental import (
     tombstone_keys,
 )
 from streamlit_flink_demo_spark.sinks import IdempotentParquetSink
+from streamlit_flink_demo_spark.streaming.ingest import start_ingest
 
 
 def attach_takedown_stream(
@@ -101,9 +102,4 @@ def attach_takedown_stream(
             }
         )
 
-    writer = key_stream.writeStream.outputMode("append").foreachBatch(
-        on_batch
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return start_ingest(key_stream, on_batch, checkpoint_dir)

@@ -20,10 +20,10 @@ Composition, Spark-first:
    per-batch ranking correct:
 3. ``foreachBatch`` ranks each batch's rows per window (top-k by
    count, token tie-break) and lands the winners in an
-   ``IdempotentParquetSink`` — finalized, exactly-once trending rows;
-   an optional bounded one-row summary per COMMITTED batch id fires
-   through ``on_summary`` (the dedup_ingest delivery contract: a
-   replayed batch after restart re-fires nothing).
+   ``IdempotentParquetSink`` — finalized, exactly-once trending rows
+   under the delivery contract of ``streaming/ingest.py`` (an optional
+   one-row summary per COMMITTED batch id; a replay re-fires
+   nothing).
 
 Scale posture: state is the open windows' (window, token) partial
 counts, watermark-evicted; the per-batch rank sees only finalized rows
@@ -46,6 +46,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from streamlit_flink_demo_spark.sinks import IdempotentParquetSink
+from streamlit_flink_demo_spark.streaming.ingest import (
+    land_and_summarize,
+    start_ingest,
+)
 
 _TRENDING_TOPK = 5
 
@@ -118,12 +122,12 @@ def attach_trending_stream(
     topk: int = _TRENDING_TOPK,
 ):
     """Wire a (ts, text) document stream through windowed term counting
-    into per-window top-k trending rows, landed exactly-once in an
-    ``IdempotentParquetSink`` at ``out_path``. Returns the started
-    ``StreamingQuery``. ``on_summary`` (optional) receives ONE bounded
-    digest dict per COMMITTED batch id — replays re-fire nothing (the
-    sink's committed/replayed status gates it), keeping downstream
-    accumulation exactly-once across restarts."""
+    into per-window top-k trending rows, landed in an
+    ``IdempotentParquetSink`` at ``out_path`` under the delivery
+    contract of ``streaming/ingest.py``. Returns the started
+    ``StreamingQuery``. ``on_summary`` (optional) receives per
+    COMMITTED batch id ``{"batch_id", "n_windows", "n_rows",
+    "max_count"}``."""
     counts = windowed_term_counts(
         doc_stream,
         ts=ts,
@@ -133,29 +137,14 @@ def attach_trending_stream(
         watermark=watermark,
     )
     sink = IdempotentParquetSink(out_path)
+    summary = {
+        "n_windows": F.countDistinct("window_start"),
+        "n_rows": F.count("*"),
+        "max_count": F.max("n"),  # None for a batch that closed no window
+    }
 
-    def _handle(batch: DataFrame, batch_id: int) -> None:
+    def on_batch(batch: DataFrame, batch_id: int) -> None:
         ranked = topk_per_window(batch, topk)
-        status = sink(ranked, batch_id)
-        if on_summary is None or status != "committed":
-            return
-        digest = (
-            ranked.agg(
-                F.countDistinct("window_start").alias("n_windows"),
-                F.count("*").alias("n_rows"),
-                F.max("n").alias("max_count"),
-            ).first()
-        )
-        on_summary(
-            {
-                "batch_id": batch_id,
-                "n_windows": digest["n_windows"],
-                "n_rows": digest["n_rows"],
-                "max_count": digest["max_count"],
-            }
-        )
+        land_and_summarize(sink, ranked, batch_id, on_summary, summary)
 
-    writer = counts.writeStream.outputMode("append").foreachBatch(_handle)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return start_ingest(counts, on_batch, checkpoint_dir)

@@ -35,6 +35,10 @@ from streamlit_flink_demo_spark.operators.retrieval import (
     chunk_embed_rows,  # noqa: F401 — re-export; shared batch/stream rows
 )
 from streamlit_flink_demo_spark.sinks import IdempotentParquetSink
+from streamlit_flink_demo_spark.streaming.ingest import (
+    land_and_summarize,
+    start_ingest,
+)
 
 
 def attach_vector_ingest(
@@ -49,31 +53,19 @@ def attach_vector_ingest(
     receives ONE bounded digest per COMMITTED batch id (chunk/doc
     counts + zero-norm count — the empty-chunk health signal);
     replayed batches re-fire nothing."""
-    rows = chunk_embed_rows(doc_stream)
     sink = IdempotentParquetSink(index_path)
+    summary = {
+        "n_chunks": F.count("*"),
+        "n_docs": F.countDistinct("doc_id"),
+        "n_empty": F.coalesce(
+            F.sum((F.col("n_tokens") == 0).cast("int")), F.lit(0)
+        ),
+    }
 
-    def _handle(batch: DataFrame, batch_id: int) -> None:
-        status = sink(batch, batch_id)
-        if on_summary is None or status != "committed":
-            return
-        d = batch.agg(
-            F.count("*").alias("n_chunks"),
-            F.countDistinct("doc_id").alias("n_docs"),
-            F.sum((F.col("n_tokens") == 0).cast("int")).alias("n_empty"),
-        ).first()
-        on_summary(
-            {
-                "batch_id": batch_id,
-                "n_chunks": d["n_chunks"],
-                "n_docs": d["n_docs"],
-                "n_empty": d["n_empty"] or 0,
-            }
-        )
+    def on_batch(batch: DataFrame, batch_id: int) -> None:
+        land_and_summarize(sink, batch, batch_id, on_summary, summary)
 
-    writer = rows.writeStream.outputMode("append").foreachBatch(_handle)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return start_ingest(chunk_embed_rows(doc_stream), on_batch, checkpoint_dir)
 
 
 def probe_fresh(

@@ -199,3 +199,28 @@ def test_every_registered_operator_has_a_docstring():
         if not name.startswith("_") and not (rq.fn.__doc__ or "").strip()
     ]
     assert not missing, f"operators without docstrings: {missing}"
+
+
+def test_only_the_ingest_runner_drives_foreach_batch():
+    """Under streaming/, ingest.py alone calls ``.foreachBatch`` and
+    defines a ``StreamingQueryListener``: every ``attach_*`` pipeline
+    goes through its runner instead of copying the delivery loop."""
+    import ast
+    from pathlib import Path
+
+    from streamlit_flink_demo_spark import streaming
+
+    sites: dict[str, list[str]] = {}
+    for path in sorted(Path(streaming.__file__).parent.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute) and node.attr == "foreachBatch":
+                sites.setdefault(path.name, []).append("foreachBatch")
+            if isinstance(node, ast.ClassDef) and any(
+                ast.unparse(b).endswith("StreamingQueryListener")
+                for b in node.bases
+            ):
+                sites.setdefault(path.name, []).append("listener")
+    # one call site and one listener, both in the runner
+    assert {k: sorted(v) for k, v in sites.items()} == {
+        "ingest.py": ["foreachBatch", "listener"]
+    }

@@ -18,8 +18,9 @@ code the driver's oracle gate checks), wired over one SparkSession:
                              sentence-transformers tier in prod)
       5. semantic dedup      docs_embed_semdedup summary
       6. similar-doc search  docs_embed_search (top-k per probe doc)
-      7. contamination gate  contamination_sa_exact (exact train->eval
-                             leakage via the suffix array)
+      7. contamination gate  contamination_capsort_exact (exact
+                             train->eval leakage over one sort of
+                             the 64-char suffix windows)
       8. language mix        docs_lang_temperature_mix (UniMax-style
                              alpha=0.5 recipe for the loader)
       9. shard               sinks.write_training_shards (deterministic
@@ -114,14 +115,13 @@ def main() -> int:
         f"{int(agg['mostly'] or 0)} docs >=50% known content"
     )
 
-    # 3b. exact repeated-SPAN removal (round 10): the suffix-array
-    # tier cuts >=24-char corpus-repeated regions inside surviving
-    # docs — doc-level dedup can't see these (Lee et al. 2022)
-    # (gram-group tier: same rows as the SA tier from one hash
-    # exchange — the production default when span removal is the only
-    # suffix-order consumer)
-    sa_rw = reg["dedup_span_rewrite_gramgroup"].fn(spark, sf_dir)
-    cut = sa_rw.agg(
+    # 3b. exact repeated-SPAN removal (round 10): cuts >=24-char
+    # corpus-repeated regions inside surviving docs — doc-level dedup
+    # can't see these (Lee et al. 2022). Positions are grouped by
+    # their exact 24-char prefix (one hash exchange, no suffix array)
+    # and checked against the brute-force suffix-sort oracle.
+    span_rw = reg["dedup_span_rewrite_gramgroup"].fn(spark, sf_dir)
+    cut = span_rw.agg(
         F.sum("chars_removed").alias("chars"),
         F.sum("n_spans_removed").alias("spans"),
     ).first()
@@ -155,9 +155,10 @@ def main() -> int:
     print(f"k-center diversity picks (selection order): {centers}")
 
     # 7. eval-contamination gate (round 10 continuation): exact
-    # train->eval leakage via the suffix array — the release check
-    # that runs before the eval split is frozen
-    contam = reg["contamination_sa_exact"].fn(spark, sf_dir)
+    # train->eval leakage (longest shared substring, capped at 64
+    # chars) — the release check that runs before the eval split is
+    # frozen
+    contam = reg["contamination_capsort_exact"].fn(spark, sf_dir)
     n_leaky = contam.filter(F.col("n_contaminated_positions") > 0).count()
     print(f"contamination gate: {n_leaky} eval docs share a >=24-char "
           f"span with train (of {contam.count()} eval docs)")

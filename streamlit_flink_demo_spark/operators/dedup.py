@@ -885,7 +885,7 @@ LEFT JOIN ranges r ON t.doc_id = r.doc_id
 """,
     tags=("dedup", "span"),
     # un-exposed round 11: the driver slot now goes to
-    # span_rewrite_suite (the EXACT capsort+gramgroup tiers,
+    # span_rewrite_suite (the EXACT gram-group tier,
     # plans/suites.py), which strictly subsumes this approximate
     # token-window form; still oracle-checked per round by
     # tests/test_oracle_parity.py.

@@ -1410,7 +1410,7 @@ def docs_logreg_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Token-level n-gram contamination (the GPT-3 appendix-C methodology)
 # --------------------------------------------------------------------------
-# The char-exact tiers (contamination_sa_exact / _capsort) answer
+# The char-exact tier (contamination_capsort_exact) answers
 # ">=24 shared characters"; the published eval-decontamination recipe
 # most labs run is TOKEN-level — GPT-3 flagged eval examples sharing a
 # 13-gram (13 consecutive tokens) with training data. Distinct

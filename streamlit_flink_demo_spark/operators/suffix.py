@@ -14,10 +14,15 @@ seed key.
 This complements the two span operators in operators/dedup.py:
 ``dedup_substring_spans`` (hashed screen) and ``dedup_suffix_spans``
 (exact L-gram grouping) answer "which regions are duplicated";
-the suffix array is the index structure that answers the harder
-questions (longest repeated substring, arbitrary-length match lookup,
-cross-corpus containment) — and its construction is the showcase of a
-genuinely iterative distributed algorithm expressed Spark-first.
+the suffix array is the index structure that answers the questions
+that need suffix order past 64 chars (longest repeated substring,
+distinct substrings, the persisted and appendable index) — and its
+construction is the showcase of a genuinely iterative distributed
+algorithm expressed Spark-first. Span removal and train/eval
+contamination only ever see LCPs capped at 64 chars, so they run
+without it (gram groups, one capped-window sort — see their sections)
+and are checked against the brute-force suffix sort replayed in
+DuckDB.
 
 Algorithm (per document; cross-document order = plain string order of
 the suffixes, ties broken by (doc_id, pos) — documents are separate
@@ -103,7 +108,8 @@ def _global_group_rank(
     range sampler places boundaries (see module docstring).
 
     ``unique=True`` declares the key provably unique per row (e.g.
-    capsort's (s64, doc_id, p)): every key group is a singleton, so
+    the dense survivor ranks of ``_dense_live_ranks``): every key
+    group is a singleton, so
     group-start rank == global index and the min-over-key-group
     window — a full hash exchange of the payload by the composite
     key — is skipped outright (guide §2.4: remove shuffles whose
@@ -602,8 +608,8 @@ def _docs_join_side(spark: SparkSession, sf_dir: str) -> DataFrame:
     item 8): frames that immediately feed a doc_id hash exchange (the
     text-attach join, the span-cut join) gained nothing from
     load_spread's round-robin repartition — the planner stacked
-    RoundRobin + hash exchanges back to back (capsort dump nodes
-    (3)/(4)), shuffling every document twice. The explode-kernel
+    RoundRobin + hash exchanges back to back (r13 plan dumps),
+    shuffling every document twice. The explode-kernel
     sides (position synthesis) keep their spread; this plain scan is
     for the sides whose very next operator repartitions anyway."""
     return load_table(spark, sf_dir, "documents")
@@ -737,11 +743,11 @@ _ADJ_BUCKET = 8192  # ranks per adjacency bucket (see _adjacent_sa_pairs)
 
 
 def _adjacent_sa_pairs(
-    with_txt: DataFrame, sharded: bool = False, carry: tuple = ("doc_id", "p")
+    with_txt: DataFrame, carry: tuple = ("doc_id", "p")
 ) -> DataFrame:
     """All rank-adjacent suffix pairs (global, or within-shard when
-    ``sharded``) of a (shard?, *carry, sa_rank, s64) frame, WITHOUT a
-    rank+1 self-join.
+    the frame has a ``shard`` column) of a (shard?, *carry, sa_rank,
+    s64) frame, WITHOUT a rank+1 self-join.
 
     r13 (guide §2.4): the self-join planned the with_txt subtree
     twice and paid two full exchanges + two SMJ sorts of the
@@ -759,7 +765,7 @@ def _adjacent_sa_pairs(
     from pyspark.sql import Window as W
 
     B = _ADJ_BUCKET
-    shard_cols = ["shard"] if sharded else []
+    shard_cols = ["shard"] if "shard" in with_txt.columns else []
     bk = (F.col("sa_rank") / B).cast("bigint")
     dup = F.when(
         (F.col("sa_rank") % B == 0) & (F.col("sa_rank") > 0),
@@ -942,7 +948,7 @@ def corpus_longest_repeat_sharded(
         "sa_rank",
         F.col("text").substr(F.col("p") + 1, F.lit(_LCP_CAP)).alias("s64"),
     )
-    pairs = _adjacent_sa_pairs(with_txt, sharded=True).select(
+    pairs = _adjacent_sa_pairs(with_txt).select(
         F.col("a_doc_id").alias("a_doc"),
         "a_p",
         F.col("b_doc_id").alias("b_doc"),
@@ -959,67 +965,91 @@ def corpus_longest_repeat_sharded(
 
 
 # --------------------------------------------------------------------------
-# Exact span REMOVAL via the suffix array — the action the index is for
+# Exact span REMOVAL — one crediting algorithm, no suffix array
 # --------------------------------------------------------------------------
-# corpus_longest_repeat reports the statistic; this operator performs
+# corpus_longest_repeat reports the statistic; the span rewrite performs
 # the Lee-et-al-style cleanup: every character position whose suffix
-# shares a >= _MIN_REPEAT-char prefix with an adjacent suffix in SA
-# order starts a repeated span [p, p + lcp); per-document spans are
-# merged (gaps-and-islands over the running max end) and the merged
-# regions are CUT from the text. This is the exact-match tier of the
-# span rewrite: dedup_span_rewrite (operators/dedup.py) approximates
-# repeats with rolling W-token window hashes and keeps the first
-# occurrence; the SA tier finds character-exact repeats of ANY length
-# >= the threshold — including repeats no fixed window tiles — and
-# removes every occurrence (the aggressive policy; threshold-keeping
-# variants differ only in which credited positions they drop).
+# shares a >= _MIN_REPEAT-char prefix with another suffix of the corpus
+# starts a repeated span [p, p + lcp) (lcp capped at _LCP_CAP);
+# per-document spans are merged (gaps-and-islands over the running max
+# end) and the merged regions are CUT from the text. dedup_span_rewrite
+# (operators/dedup.py) approximates repeats with rolling W-token window
+# hashes and keeps the first occurrence; this tier finds
+# character-exact repeats of ANY length >= the threshold — including
+# repeats no fixed window tiles — and removes every occurrence (the
+# aggressive policy).
+#
+# Suffix order past 64 chars is never needed: a credited length is
+# capped at 64 and thresholded at 24, so every crediting partner shares
+# the position's exact 24-char prefix, and inside that group the
+# position's max capped LCP with ANY member is attained at a neighbour
+# in any order that sorts the 64-char windows (sorted-strings property:
+# cp(x_i, x_j) = min of the adjacent cps between them).
+# _credit_gram_groups is that computation, written once; the corpus
+# rewrite (dedup_span_rewrite_gramgroup) and the batch/ingest rewrite
+# (span_rewrite_batch) both call it. The reference every survivor is
+# checked against is the DuckDB replay of the brute-force suffix sort
+# (_SA_REWRITE_ORACLE), which credits TRUE suffix-order neighbours.
 
 _MIN_REPEAT = 24
 
 
-def _merged_repeat_ranges(
-    spark, docs: DataFrame, sf_dir: str, shards: int | None = None
-) -> DataFrame:
-    """(doc_id, rs, n_spans_removed, chars_removed): merged repeated
-    intervals per document, from adjacent-rank LCPs over the global
-    suffix array (``shards=None``) or WITHIN each shard's array (the
-    sharded production form — adjacency never crosses shards). rs is
-    a sorted array of disjoint {s, e} structs (char offsets,
-    end-exclusive)."""
-    sa = _suffix_ranks_cached(spark, sf_dir, shards)
-    shard_cols = ["shard"] if shards is not None else []
-    with_txt = sa.join(docs.select("doc_id", "text"), "doc_id").select(
-        *shard_cols,
-        "doc_id",
-        "p",
-        "sa_rank",
-        F.col("text").substr(F.col("p") + 1, F.lit(_LCP_CAP)).alias("s64"),
+def _credit_gram_groups(pos: DataFrame, *carry: str) -> DataFrame:
+    """Span starters of a (g, doc_id, p, s64, *carry) position frame —
+    g the exact _MIN_REPEAT-char (24) prefix of the _LCP_CAP-char (64)
+    window s64 — as (doc_id, p, *carry, lcp) rows: lcp is the longest
+    common prefix, capped at 64, that the position shares with any
+    other member of its gram group, kept when it reaches 24.
+
+    Plan: ONE hash exchange on g feeding a single window stage — group
+    count (a singleton's max lcp is < 24, so it drops before the
+    sort), in-group prev/next via lag/lead, lcp = greatest of the two
+    capped LCPs. No range sampling, no checkpoint, no driver collect;
+    group width is bounded by true 24-gram duplication, not by corpus
+    size. The in-group order only has to put equal s64 values next to
+    each other: (doc_id, p) makes it total, but the credited maximum
+    does not depend on it (tests/test_suffix.py::
+    test_gramgroup_threshold_equivalence_property). lag/lead are
+    staged into plain columns BEFORE the LCP fold, so each window
+    function is planned and evaluated once instead of once per
+    reference inside the two _lcp_expr expansions."""
+    from pyspark.sql import Window as W
+
+    keep = ["doc_id", "p", *carry]
+    wc = W.partitionBy("g")
+    wg = wc.orderBy("s64", "doc_id", "p")
+    nbrs = (
+        pos.withColumn("gsz", F.count("*").over(wc))
+        .filter(F.col("gsz") >= 2)
+        .select(
+            *keep,
+            "s64",
+            F.lag("s64").over(wg).alias("prev_s"),
+            F.lead("s64").over(wg).alias("next_s"),
+        )
     )
-    pairs = _adjacent_sa_pairs(
-        with_txt, sharded=shards is not None
-    ).select(
-        F.col("a_doc_id").alias("a_doc"),
-        "a_p",
-        F.col("b_doc_id").alias("b_doc"),
-        "b_p",
-        _lcp_expr(F.col("a_s64"), F.col("b_s64")).alias("lcp"),
+    lcp = F.greatest(
+        *(
+            F.coalesce(_lcp_expr(F.col("s64"), F.col(c)), F.lit(0))
+            for c in ("prev_s", "next_s")
+        )
     )
-    credited = _credit_both(pairs)
-    return _ranges_from_credited(credited)
+    return nbrs.select(*keep, lcp.alias("lcp")).filter(
+        F.col("lcp") >= _MIN_REPEAT
+    )
 
 
 def _ranges_from_credited(credited: DataFrame) -> DataFrame:
-    """credited (doc_id, p, lcp) rows -> merged disjoint repeat ranges
-    per doc (the gaps-and-islands tail shared by every crediting
-    strategy: global SA adjacency, per-shard adjacency, capped-sort)."""
+    """Span-starter (doc_id, p, lcp) rows from ``_credit_gram_groups``
+    -> (doc_id, rs, n_spans_removed, chars_removed): the spans
+    [p, p + lcp) merged into disjoint ranges per doc, rs a sorted
+    array of {s, e} structs (char offsets, end-exclusive). Overlapping
+    and touching spans merge, so a position credited by more than one
+    row yields the same ranges as its longest span alone."""
     from pyspark.sql import Window as W
 
-    # best repeat per position; only span starters survive
-    iv = (
-        credited.groupBy("doc_id", "p")
-        .agg(F.max("lcp").alias("lcp"))
-        .filter(F.col("lcp") >= _MIN_REPEAT)
-        .select("doc_id", F.col("p").alias("s"), (F.col("p") + F.col("lcp")).alias("e"))
+    iv = credited.select(
+        "doc_id", F.col("p").alias("s"), (F.col("p") + F.col("lcp")).alias("e")
     )
     # gaps-and-islands on the running max end: a new island starts
     # when this interval begins past every previous end (s strictly
@@ -1046,37 +1076,26 @@ def _ranges_from_credited(credited: DataFrame) -> DataFrame:
     )
 
 
-def _sa_rewrite_oracle(sharded: bool) -> str:
-    """One template for the global AND the per-shard span-removal
-    oracle — the only differences are the shard column, the window
-    partition, and the adjacency's shard equality, so generating both
-    from one body keeps the two replays from drifting."""
-    shard_col = (
-        f"{u60_sql('CAST(doc_id AS VARCHAR)')} % {_SA_SHARDS} AS shard,\n"
-        "         "
-        if sharded
-        else ""
-    )
-    shard_sel = "shard, " if sharded else ""
-    part = "PARTITION BY shard " if sharded else ""
-    adj_shard = "b.shard = a.shard AND " if sharded else ""
-    return f"""
+# The reference for every span rewrite: the brute-force suffix sort,
+# adjacent-rank LCPs, the interval merge and a character-level cut,
+# replayed in DuckDB.
+_SA_REWRITE_ORACLE = f"""
 WITH pos AS (
-  SELECT {shard_col}doc_id, k AS p, substr(text, k + 1) AS sfx
+  SELECT doc_id, k AS p, substr(text, k + 1) AS sfx
   FROM (
     SELECT doc_id, text, unnest(range(0, length(text))) AS k
     FROM documents WHERE length(text) > 0
   )
 ),
 sa AS (
-  SELECT {shard_sel}doc_id, p, substr(sfx, 1, {_LCP_CAP}) AS s64,
-         ROW_NUMBER() OVER ({part}ORDER BY sfx, doc_id, p) - 1 AS r
+  SELECT doc_id, p, substr(sfx, 1, {_LCP_CAP}) AS s64,
+         ROW_NUMBER() OVER (ORDER BY sfx, doc_id, p) - 1 AS r
   FROM pos
 ),
 adj AS (
   SELECT a.doc_id AS a_doc, a.p AS a_p, a.s64 AS a_s,
          b.doc_id AS b_doc, b.p AS b_p, b.s64 AS b_s
-  FROM sa a JOIN sa b ON {adj_shard}b.r = a.r + 1
+  FROM sa a JOIN sa b ON b.r = a.r + 1
 ),
 pairs AS (
   SELECT a_doc, a_p, b_doc, b_p,
@@ -1154,38 +1173,21 @@ WHERE length(d.text) > 0
 """
 
 
-@register(
-    "dedup_sa_span_rewrite",
-    oracle=_sa_rewrite_oracle(False),
-    tags=("dedup", "suffix", "span"),
-    expose=False,
-)
-def dedup_sa_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact Lee-et-al-style span removal driven by the suffix array:
-    merged character-exact repeated regions (adjacent-rank LCP >=
-    24 (_MIN_REPEAT), capped at 64 (_LCP_CAP)) are cut from every doc.
-    Returns per-doc accounting plus the md5 of the cleaned text; the
-    oracle replays the whole chain — SA order, LCPs, interval merge,
-    character-level cut — so the rewrite surface is value-exact.
-
-    The cut is one JVM ``aggregate`` over the doc's sorted disjoint
-    ranges building the kept text from inter-range substrings — the
-    text moves through exactly one exchange (the ranges join), never
-    explodes into per-char rows (the oracle's explode+anti-join is
-    the formulation DuckDB prefers; both reduce to the same kept
-    stream)."""
-    docs = _docs_join_side(spark, sf_dir).filter(F.length("text") > 0)
-    return _apply_span_cut(docs, _merged_repeat_ranges(spark, docs, sf_dir))
-
-
 def _apply_span_cut(
     docs: DataFrame, ranges: DataFrame, keep_text: bool = False
 ) -> DataFrame:
     """Cut the merged disjoint ranges out of each document and report
-    per-doc accounting + clean-text md5 — shared by the global and the
-    sharded rewrite so the cut semantics cannot fork. ``keep_text``
+    per-doc accounting + clean-text md5 — shared by the corpus and the
+    batch rewrite so the cut semantics cannot fork. ``keep_text``
     appends the cleaned text itself (the ingest path LANDS cleaned
-    documents; the batch accounting queries drop it)."""
+    documents; the batch accounting queries drop it).
+
+    The cut is one JVM ``aggregate`` over the doc's sorted disjoint
+    ranges building the kept text from inter-range substrings — the
+    text moves through exactly one exchange (the ranges join), never
+    explodes into per-char rows (the oracle's explode+anti-join is the
+    formulation DuckDB prefers; both reduce to the same kept
+    stream)."""
     rewritten = docs.join(ranges, "doc_id", "left").withColumn(
         "clean_text",
         F.when(F.col("rs").isNull(), F.col("text")).otherwise(
@@ -1216,29 +1218,6 @@ def _apply_span_cut(
     return rewritten.select(*cols)
 
 
-@register(
-    "dedup_sa_span_rewrite_sharded",
-    oracle=_sa_rewrite_oracle(True),
-    tags=("dedup", "suffix", "span"),
-    expose=False,
-)
-def dedup_sa_span_rewrite_sharded(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Span removal over the SHARDED suffix arrays (hash(doc_id) % 4,
-    _SA_SHARDS) — the form a Lee-et-al deployment actually executes:
-    repeats are found within each shard's array (cross-shard repeats
-    are invisible by design; shard size is the knob), the cut itself
-    is the shared ``_apply_span_cut``. The oracle replays the
-    per-shard chain — shard map, per-shard suffix order, LCPs,
-    interval merge, character cut — via the same template as the
-    global oracle (one builder, two variants, zero drift)."""
-    docs = _docs_join_side(spark, sf_dir).filter(F.length("text") > 0)
-    return _apply_span_cut(
-        docs, _merged_repeat_ranges(spark, docs, sf_dir, shards=_SA_SHARDS)
-    )
-
-
 # r14 (VERDICT r13 item 3): the dup-gram prefilter ends in an explicit
 # broadcast of a DATA-DEPENDENT key set (every duplicated 24-gram), and
 # an explicit hint overrides Spark's size checks — on a heavily
@@ -1251,34 +1230,28 @@ def dedup_sa_span_rewrite_sharded(
 # (256 MB source ≈ tens of M positions at the measured ~0.26 chars/
 # byte, so realistic dup sets of ~15% stay within a few hundred MB of
 # broadcast) the prefilter runs as in r13; above it the prefilter is
-# SKIPPED outright — the downstream gsz >= 2 window filter already
+# SKIPPED outright — the crediting window's gsz >= 2 filter already
 # guarantees exactness, so the fallback is the pre-r13 plan shape
 # (predictable full-shuffle degradation), not a shuffle semi-join that
 # would re-exchange the payload it exists to protect. The production
-# fix at 100 TB is the artifact-side dup-gram prefilter
-# (span_rewrite_batch's sidecar path), not a bigger broadcast.
+# fix at 100 TB is the persisted gram index (span_rewrite_batch's
+# artifact path), not a bigger broadcast.
 _PREFILTER_DOCS_BYTES = 256 << 20
 
 
 def _dup_gram_pos(docs: DataFrame, sf_dir: str) -> DataFrame:
     """(doc_id, p, s64) restricted to positions whose exact
     _MIN_REPEAT-char (24) seed gram occurs at >= 2 corpus positions —
-    the shared prefilter of the capsort and gram-group rewrite tiers
-    (r13 optimization, guide §2.3/§3.2: decide with small rows, move
-    the heavy payload once).
+    the corpus rewrite's prefilter (r13 optimization, guide §2.3/§3.2:
+    decide with small rows, move the heavy payload once).
 
-    Why it is exact for BOTH tiers: the rewrite thresholds at
-    lcp >= 24, and any pair attaining that shares its 24-prefix, so
-    (a) a position whose 24-gram is corpus-unique (or whose tail is
-    shorter than 24 chars) can never credit, or be credited, a span —
-    its max LCP with anything is < 24; and (b) for a kept position
-    the crediting partner sits inside the contiguous sorted run of
-    its 24-prefix group, which the filter keeps whole, so subset
-    adjacency preserves every credited value >= 24 bit-for-bit
-    (values < 24 may shrink, and are discarded by
-    ``_ranges_from_credited`` either way). This is the gram-group
-    tier's own exactness argument, promoted to a prefilter both
-    tiers share.
+    Why it is exact: the rewrite thresholds at lcp >= 24, and any pair
+    attaining that shares its 24-prefix, so a position whose 24-gram is
+    corpus-unique (or whose tail is shorter than 24 chars) can never
+    credit, or be credited, a span — its max LCP with anything is
+    < 24 — and dropping it leaves every other gram group whole. This
+    is the gram-group argument of ``_credit_gram_groups``, applied
+    before the exchange instead of inside the window.
 
     Plan shape: pass 1 aggregates xxhash64 of the seed gram — 8-byte
     keys with map-side partial aggregation, never the 64-char
@@ -1286,14 +1259,17 @@ def _dup_gram_pos(docs: DataFrame, sf_dir: str) -> DataFrame:
     them (measured sf0.1: 202k of 1 371k positions sit in duplicated
     24-gram groups) with a broadcast LEFT SEMI before any
     payload-carrying exchange. Hash collisions only ever KEEP a
-    singleton position (its credited lcp stays < 24 and is filtered
-    downstream), so the hash never affects results. The duplicated-
-    gram set is bounded by true duplication, not corpus size; on a
-    100 TB corpus where it outgrows a broadcast, swap the explicit
-    broadcast for the runtime Bloom-filter semi-join (guide §3.2) —
-    the decide-with-8-byte-keys structure is unchanged.
-    track_persist'd so the suite's two tiers share one computation of
-    the surviving ~15%."""
+    singleton position (the crediting window's exact gsz >= 2 filter
+    drops it), so the hash never affects results. The duplicated-gram
+    set is bounded by true duplication, not corpus size; on a 100 TB
+    corpus where it outgrows a broadcast, swap the explicit broadcast
+    for the runtime Bloom-filter semi-join (guide §3.2) — the
+    decide-with-8-byte-keys structure is unchanged.
+    track_persist'd: a cache-hit dispatch of ``span_rewrite_suite``
+    (or of ``dedup_span_rewrite_gramgroup``) reuses the persisted
+    surviving ~15% instead of re-running both passes, and
+    track_persist re-registers the persist after any
+    ``clearCache()``."""
     pos = (
         docs.select(
             "doc_id",
@@ -1315,9 +1291,9 @@ def _dup_gram_pos(docs: DataFrame, sf_dir: str) -> DataFrame:
 
     if table_bytes(sf_dir, "documents") > _PREFILTER_DOCS_BYTES:
         # gate open: skip the prefilter (see _PREFILTER_DOCS_BYTES) —
-        # exactness is carried by the tiers' own gsz >= 2 filters; no
-        # persist either (caching every corpus position is the same
-        # unbounded-state mistake as the broadcast).
+        # exactness is carried by the crediting window's gsz >= 2
+        # filter; no persist either (caching every corpus position is
+        # the same unbounded-state mistake as the broadcast).
         return pos
     gh = F.xxhash64(F.substring(F.col("s64"), 1, _MIN_REPEAT))
     dup = (
@@ -1333,85 +1309,55 @@ def _dup_gram_pos(docs: DataFrame, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "dedup_span_rewrite_capsort",
-    oracle=_sa_rewrite_oracle(False),
+    "dedup_span_rewrite_gramgroup",
+    oracle=_SA_REWRITE_ORACLE,
     tags=("dedup", "suffix", "span"),
     expose=False,
 )
-def dedup_span_rewrite_capsort(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GLOBAL-exact span removal WITHOUT building the suffix array:
-    one range-sort of the 64-char capped suffixes replaces the whole
-    prefix-doubling construction. Identical output to
-    ``dedup_sa_span_rewrite`` (same oracle SQL, and pinned equal in
-    pytest), because the rewrite's semantics only ever see LCPs capped
-    at _LCP_CAP (64): a position's credited repeat length is its max
-    common prefix with ANY other suffix, capped at 64 — which is fully
-    determined by the 64-char window s64(p). In any lexicographic
-    order of the s64 strings, that max is attained at an adjacent row
-    (sorted-strings property: cp(x_i, x_j) = min of adjacent cps
-    between them), and full-suffix order is a refinement of s64 order,
-    so adjacency crediting over the s64 sort and over the true SA
-    yield the same per-position max — the SA's extra work (resolving
-    order BEYOND 64 chars) is information the rewrite then throws
-    away.
+def dedup_span_rewrite_gramgroup(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """GLOBAL-exact span removal with NO global sort: hash-group
+    positions by their exact 24-char prefix (_MIN_REPEAT), sort only
+    WITHIN each group (``_credit_gram_groups``), then merge and cut.
+    Returns per-doc accounting plus the md5 of the cleaned text; the
+    oracle replays the brute-force suffix-array chain — SA order,
+    LCPs, interval merge, character-level cut — so the rewrite surface
+    is value-exact.
 
-    Cost: ~88 B/char through ONE range exchange, vs the SA's ~48 B/
-    char seed sort plus the doubling rounds over its residual active
-    set and their per-round checkpoint materializations (r14: the
-    32-char seed shrank that residual to the deep-tie ~13% of
-    positions, narrowing this tier's construction advantage — but
-    capsort still wins when span removal is the only consumer, and it
-    needs no fail-stop checkpoint discipline at all) — and unlike the sharded
-    tier this loses NO cross-shard repeats. Use the SA when arbitrary-
-    length queries (pattern lookup, distinct substrings, contamination
-    scans) must also be served; use this when span removal is the only
-    consumer. Positions explode (doc_id, p, s64) exactly like the SA
-    seed round; `_global_group_rank` on the unique key (s64, doc_id,
-    p) is the global index (group size 1), adjacent ranks join, and
-    the credited tail + cut are the shared helpers, so the three span
-    tiers cannot drift."""
+    The broadcast dup-gram prefilter (_dup_gram_pos) drops
+    singleton-gram positions BEFORE the crediting exchange, so the
+    window stage shuffles the surviving ~15% instead of every corpus
+    position; the exact in-window gsz >= 2 filter stays, which is what
+    makes xxhash64 collisions in the prefilter harmless to group
+    membership."""
     docs = load_spread(spark, sf_dir, "documents").filter(
         F.length("text") > 0
     )
-    # r13 optimization: only positions in duplicated 24-gram groups
-    # can contribute a span (see _dup_gram_pos — exactness argument
-    # there), so the range sort runs over the surviving ~15% and the
-    # key (s64, doc_id, p) is unique, which drops the min-over-group
-    # exchange entirely (unique=True).
-    pos = _dup_gram_pos(docs, sf_dir)
-    ranked = _global_group_rank(
-        pos, ["s64", "doc_id", "p"], unique=True
-    ).select("doc_id", "p", "s64", F.col("rank").alias("r"))
-    a = ranked.alias("a")
-    b = ranked.select(
-        (F.col("r") - 1).alias("prev_r"),
-        F.col("doc_id").alias("b_doc"),
-        F.col("p").alias("b_p"),
-        F.col("s64").alias("b_s64"),
+    pos = _dup_gram_pos(docs, sf_dir).withColumn(
+        "g", F.substring("s64", 1, _MIN_REPEAT)
     )
-    pairs = a.join(b, F.col("a.r") == F.col("prev_r")).select(
-        F.col("a.doc_id").alias("a_doc"),
-        F.col("a.p").alias("a_p"),
-        "b_doc",
-        "b_p",
-        _lcp_expr(F.col("a.s64"), F.col("b_s64")).alias("lcp"),
-    )
-    credited = _credit_both(pairs)
     cut_docs = _docs_join_side(spark, sf_dir).filter(F.length("text") > 0)
-    return _apply_span_cut(cut_docs, _ranges_from_credited(credited))
+    return _apply_span_cut(
+        cut_docs, _ranges_from_credited(_credit_gram_groups(pos))
+    )
 
 
 # --------------------------------------------------------------------------
-# Exact train/eval contamination via the suffix array
+# Exact train/eval contamination over the capped-window sort
 # --------------------------------------------------------------------------
 # docs_eval_contamination (operators/pipeline.py) measures SHINGLE
 # overlap; this is the exact tier Lee et al. 2022 run for train-test
 # leakage: for every EVAL document, the longest character-exact
-# substring it shares with ANY TRAIN document. SA property: among the
-# train suffixes, the one maximizing LCP with an eval suffix is one of
-# its two NEAREST train neighbors in suffix order — so the whole
-# corpus-cross-corpus match problem reduces to a nearest-other-set
-# scan over rank order plus two LCPs per eval position.
+# substring it shares with ANY TRAIN document, capped at 64
+# (_LCP_CAP). The capped length is fully determined by the 64-char
+# windows, and in ANY lexicographic order of those windows the train
+# suffix maximizing the capped LCP with an eval suffix is one of its
+# two NEAREST train neighbours (sorted-strings property, restricted to
+# the train subset) — so the cross-corpus match problem reduces to one
+# range-sort of the windows, a nearest-other-set scan over that order,
+# and two LCPs per eval position. Suffix order past 64 chars is never
+# needed.
 #
 # The scan is the distributed-prefix-scan shape: range-partition by
 # rank (localCheckpoint pins the partitioning — same fail-stop
@@ -1425,9 +1371,10 @@ _CONTAM_T = 24  # chars: position counts as contaminated at >= this
 
 
 def _nearest_train_scan(flagged: DataFrame) -> DataFrame:
-    """Input: (shard-free) SA rows flagged is_train. Output: the EVAL
-    rows with prev_tr / next_tr = nearest train ranks in SA order
-    (null when none exists on that side)."""
+    """Input: rows with a unique rank ``sa_rank`` in capped-window
+    order, flagged is_train. Output: the EVAL rows with prev_tr /
+    next_tr = nearest train ranks in that order (null when none exists
+    on that side)."""
     from pyspark.sql import Window as W
 
     rp = (
@@ -1554,234 +1501,6 @@ WHERE NOT ({_TRAIN_SQL_D}) AND length(d.text) > 0
 
 
 @register(
-    "contamination_sa_exact",
-    oracle=_CONTAM_ORACLE,
-    tags=("pipeline", "contamination", "suffix"),
-    expose=False,
-)
-def contamination_sa_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact train→eval contamination per eval document: the longest
-    character-exact substring shared with any train document (capped
-    at 64, _LCP_CAP) and the count of eval positions whose match
-    reaches 24 (_CONTAM_T) chars. Split = the engine's standard 90/10 hash split
-    (docs_train_eval_split convention). One shared SA construction
-    (the session memo), one nearest-other-set scan, two LCPs per eval
-    position — never an eval×train join. The oracle replays the whole
-    chain with global windows, so every match length is hash-checked."""
-    docs = _docs_join_side(spark, sf_dir).filter(F.length("text") > 0)
-    sa = _suffix_ranks_cached(spark, sf_dir, None)
-    is_train = (u60(F.col("doc_id").cast("string")) % 100) < 90
-    with_txt = sa.join(docs.select("doc_id", "text"), "doc_id").select(
-        "doc_id",
-        "p",
-        "sa_rank",
-        F.col("text").substr(F.col("p") + 1, F.lit(_LCP_CAP)).alias("s64"),
-        is_train.alias("is_train"),
-    )
-    ev = _nearest_train_scan(with_txt)
-    tr = with_txt.filter("is_train").select(
-        F.col("sa_rank").alias("tr_rank"), F.col("s64").alias("tr_s64")
-    )
-    cand = (
-        ev.select(
-            "doc_id",
-            "p",
-            "s64",
-            F.explode(F.array("prev_tr", "next_tr")).alias("nbr"),
-        )
-        .filter(F.col("nbr").isNotNull())
-        .join(tr, F.col("nbr") == F.col("tr_rank"))
-        .select(
-            "doc_id", "p", _lcp_expr(F.col("s64"), F.col("tr_s64")).alias("lcp")
-        )
-    )
-    best = cand.groupBy("doc_id", "p").agg(F.max("lcp").alias("m"))
-    per_doc = best.groupBy("doc_id").agg(
-        F.max("m").cast("bigint").alias("max_train_match"),
-        F.sum(F.when(F.col("m") >= _CONTAM_T, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_contaminated_positions"),
-    )
-    ev_docs = docs.filter(~is_train).select("doc_id")
-    return ev_docs.join(per_doc, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("max_train_match", F.lit(0))
-        .cast("bigint")
-        .alias("max_train_match"),
-        F.coalesce("n_contaminated_positions", F.lit(0))
-        .cast("bigint")
-        .alias("n_contaminated_positions"),
-    )
-
-
-@register(
-    "dedup_span_rewrite_gramgroup",
-    oracle=_sa_rewrite_oracle(False),
-    tags=("dedup", "suffix", "span"),
-    expose=False,
-)
-def dedup_span_rewrite_gramgroup(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """GLOBAL-exact span removal with NO global sort at all — the
-    third tier, and the plan a 100 TB run wants: hash-group positions
-    by their exact 24-char prefix (_MIN_REPEAT), sort only WITHIN each
-    group. Exact because the rewrite thresholds at lcp >= 24: any pair
-    achieving that shares the 24-prefix (same group), and within the
-    group — where every pair already agrees on >= 24 chars — the
-    in-group sorted neighbors attain each position's global max capped
-    LCP (sorted-strings property); a position whose group is a
-    singleton has max lcp < 24 and drops before the sort. Same oracle
-    as the SA and capsort tiers, pinned row-identical to both in
-    pytest.
-
-    Plan: ONE hash exchange (partition by the 24-gram) feeding a
-    single window stage — group count (singleton drop), in-group
-    row_number, prev/next via lag/lead, credited lcp =
-    greatest(lcp(prev), lcp(next)) — then the shared islands/cut.
-    No range sampling, no localCheckpoint, no driver collect: nothing
-    to pin, nothing to fail-stop, and group width is bounded by true
-    24-gram duplication (the same boundedness dedup_suffix_spans
-    rides), not by corpus size. Versus capsort's global range-sort
-    this trades the sampler + rank machinery for a plain hash
-    shuffle of the same ~88 B/char payload."""
-    from pyspark.sql import Window as W
-
-    docs = load_spread(spark, sf_dir, "documents").filter(
-        F.length("text") > 0
-    )
-    # r13 optimization: the broadcast dup-gram prefilter
-    # (_dup_gram_pos) drops singleton-gram positions BEFORE the hash
-    # exchange, so the window stage shuffles the surviving ~15%
-    # instead of every corpus position. The exact in-window gsz >= 2
-    # filter below stays — it is what makes xxhash64 collisions in
-    # the prefilter harmless to group membership.
-    pos = _dup_gram_pos(docs, sf_dir).withColumn(
-        "g", F.substring("s64", 1, _MIN_REPEAT)
-    )
-    wg = W.partitionBy("g").orderBy("s64", "doc_id", "p")
-    wc = W.partitionBy("g")
-    sized = pos.withColumn("gsz", F.count("*").over(wc)).filter(
-        F.col("gsz") >= 2
-    )
-    # lag/lead staged into plain columns BEFORE the LCP fold: the
-    # analyzer does extract window expressions out of lambda bodies
-    # (the delta/batch sites ran that way through r13), but staging
-    # guarantees each window function is planned and evaluated ONCE
-    # instead of once per extracted reference — now applied uniformly
-    # at all three lag/lead sites (r13 ADVICE).
-    nbrs = sized.select(
-        "doc_id",
-        "p",
-        "s64",
-        F.lag("s64").over(wg).alias("prev_s"),
-        F.lead("s64").over(wg).alias("next_s"),
-    )
-    with_nbr = nbrs.select(
-        "doc_id",
-        "p",
-        F.greatest(
-            F.coalesce(
-                _lcp_expr(F.col("s64"), F.col("prev_s")), F.lit(0)
-            ),
-            F.coalesce(
-                _lcp_expr(F.col("s64"), F.col("next_s")), F.lit(0)
-            ),
-        ).alias("lcp"),
-    )
-    cut_docs = _docs_join_side(spark, sf_dir).filter(F.length("text") > 0)
-    return _apply_span_cut(cut_docs, _ranges_from_credited(with_nbr))
-
-
-_DELTA_RW_ORACLE = f"""
-WITH full_rw AS ({_sa_rewrite_oracle(False)})
-SELECT * FROM full_rw
-WHERE ({u60_sql("CAST(doc_id AS VARCHAR)")} % 100) >= 90
-"""
-
-
-@register(
-    "dedup_span_rewrite_delta",
-    oracle=_DELTA_RW_ORACLE,
-    tags=("dedup", "suffix", "span", "incremental"),
-    expose=False,
-)
-def dedup_span_rewrite_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental exact span removal — rewrite only the ARRIVING
-    slice (hash-mod 10%, the engine's delta convention) against the
-    full standing corpus, the daily-crawl form of the gram-group
-    tier: a delta document's spans must be detected against base AND
-    delta text, but base documents are not rewritten. Output rows are
-    exactly the delta rows of the global rewrite (the oracle replays
-    the global chain and filters — one template, no drift).
-
-    The gram-group structure is what makes the increment cheap: only
-    24-gram groups CONTAINING a delta position can credit a delta
-    position, so base positions are pruned by a semi-join on the gram
-    key before the window — the sort state is bounded by
-    delta-relevant groups, not the corpus. In this query form the
-    prune itself still exchanges the base grams once; the standing
-    artifact form (operators/incremental.py pattern) pre-buckets the
-    base gram table by g so a delta batch probes only matching
-    buckets and base text is never rescanned."""
-    from pyspark.sql import Window as W
-
-    docs = load_spread(spark, sf_dir, "documents").filter(
-        F.length("text") > 0
-    )
-    is_delta = (u60(F.col("doc_id").cast("string")) % 100) >= 90
-    pos = docs.select(
-        "doc_id",
-        is_delta.alias("is_delta"),
-        F.explode(F.sequence(F.lit(0), F.length("text") - 1)).alias("p"),
-        F.col("text"),
-    ).select(
-        "doc_id",
-        "is_delta",
-        "p",
-        F.col("text").substr(F.col("p") + 1, F.lit(_LCP_CAP)).alias("s64"),
-    ).withColumn("g", F.substring("s64", 1, _MIN_REPEAT)).filter(
-        F.length("g") >= _MIN_REPEAT
-    )
-    delta_grams = pos.filter("is_delta").select("g").distinct()
-    pruned = pos.join(delta_grams, "g", "leftsemi")
-    wg = W.partitionBy("g").orderBy("s64", "doc_id", "p")
-    wc = W.partitionBy("g")
-    sized = pruned.withColumn("gsz", F.count("*").over(wc)).filter(
-        F.col("gsz") >= 2
-    )
-    # lag/lead staged into plain columns BEFORE the LCP fold (the
-    # dedup_span_rewrite_gramgroup discipline): each window function
-    # evaluates once instead of once per reference inside the two
-    # _lcp_expr expansions.
-    nbrs = sized.select(
-        "doc_id",
-        "is_delta",
-        "p",
-        "s64",
-        F.lag("s64").over(wg).alias("prev_s"),
-        F.lead("s64").over(wg).alias("next_s"),
-    )
-    credited = nbrs.select(
-        "doc_id",
-        "is_delta",
-        "p",
-        F.greatest(
-            F.coalesce(
-                _lcp_expr(F.col("s64"), F.col("prev_s")), F.lit(0)
-            ),
-            F.coalesce(
-                _lcp_expr(F.col("s64"), F.col("next_s")), F.lit(0)
-            ),
-        ).alias("lcp"),
-    ).filter("is_delta").drop("is_delta")
-    cut_docs = _docs_join_side(spark, sf_dir).filter(F.length("text") > 0)
-    return _apply_span_cut(
-        cut_docs.filter(is_delta), _ranges_from_credited(credited)
-    )
-
-
-@register(
     "contamination_capsort_exact",
     oracle=_CONTAM_ORACLE,
     tags=("pipeline", "contamination", "suffix"),
@@ -1790,21 +1509,16 @@ def dedup_span_rewrite_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 def contamination_capsort_exact(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Exact train→eval contamination WITHOUT the suffix array — the
-    capped-sort tier (dedup_span_rewrite_capsort's argument, applied
-    to the cross-set query): the reported match length is capped at
-    64 (_LCP_CAP), so it is fully determined by the 64-char windows,
-    and in ANY lexicographic order of those windows the train suffix
-    maximizing the capped LCP with an eval suffix is one of its two
-    nearest TRAIN neighbors (sorted-strings property, restricted to
-    the train subset). One range-sort of the windows replaces the
-    prefix-doubling build; the nearest-other-set scan, the two LCPs
-    per eval position, and the per-doc aggregation are shared with
-    ``contamination_sa_exact`` — same oracle SQL, pinned row-identical
-    in pytest. Use the SA tier when the index must also serve
-    arbitrary-length/order queries; for a contamination pass alone
-    this is the production path (~10× cheaper construction at sf0.1,
-    SCALE.md)."""
+    """Exact train→eval contamination per eval document: the longest
+    character-exact substring shared with any train document (capped
+    at 64, _LCP_CAP) and the count of eval positions whose match
+    reaches 24 (_CONTAM_T) chars. Split = the engine's standard 90/10
+    hash split (docs_train_eval_split convention). One range-sort of
+    the 64-char windows (``_global_group_rank``), one
+    nearest-other-set scan, two LCPs per eval position — never an
+    eval×train join and no prefix-doubling build. The oracle replays
+    the chain over the brute-force suffix sort with global windows, so
+    every match length is hash-checked."""
     docs = load_spread(spark, sf_dir, "documents").filter(
         F.length("text") > 0
     )
@@ -2242,8 +1956,8 @@ def corpus_pattern_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # broadcastable) gram set joined on (gb, g) — the partitioned scan
 # dynamic-partition-prunes to the batch's buckets, so base text is
 # never rescanned and probe cost ∝ batch size + truly-matching
-# groups. This is the artifact form dedup_span_rewrite_delta's
-# docstring promises; streaming/span_ingest.py rides the same index,
+# groups. dedup_span_rewrite_delta_gramidx serves the incremental
+# rewrite from it; streaming/span_ingest.py rides the same index,
 # and operators/compaction.py folds committed ingested documents back
 # into it as deltas (incremental.py's commit_delta discipline).
 
@@ -2375,9 +2089,9 @@ def span_rewrite_batch(
     frame (gram_positions of the corpus) or the PERSISTED bucketed
     artifact (read_gram_index — detected by its gb column): the
     artifact probe joins on (gb, g), so the partitioned scan prunes
-    to the batch's gram buckets and base text is never rescanned."""
-    from pyspark.sql import Window as W
-
+    to the batch's gram buckets and base text is never rescanned.
+    Crediting is ``_credit_gram_groups`` over corpus ∪ batch positions,
+    kept for the batch side only."""
     # r14 note (VERDICT r13 item 7): the batch-side dup-gram prefilter
     # was built and MEASURED here — keep = (grams matching the live
     # index, derived g-column-pruned from the same read as cpos) ∪
@@ -2391,8 +2105,8 @@ def span_rewrite_batch(
     # construction). The r13 sketch of a BUILD-TIME dup-gram sidecar
     # is additionally unsound under compaction: a data delta commits
     # grams the base sidecar lacks, and a stale-LOW sidecar silently
-    # drops true matches. The in-window gsz >= 2 filter below remains
-    # the exactness gate either way.
+    # drops true matches. The crediting window's gsz >= 2 filter
+    # remains the exactness gate either way.
     bpos = gram_positions(batch_docs).withColumn("is_b", F.lit(True))
     bg = bpos.select("g").distinct()
     if "gb" in corpus_index.columns:
@@ -2411,46 +2125,20 @@ def span_rewrite_batch(
     allpos = cpos.unionByName(
         bpos.select("g", "doc_id", "p", "s64", "is_b")
     )
-    # deterministic in-group order: s64 first (the crediting order),
-    # then origin/doc/p purely as a tie-break among equal windows
-    wg = W.partitionBy("g").orderBy("s64", "is_b", "doc_id", "p")
-    wc = W.partitionBy("g")
-    sized = allpos.withColumn("gsz", F.count("*").over(wc)).filter(
-        F.col("gsz") >= 2
-    )
-    # staged lag/lead (the dedup_span_rewrite_gramgroup discipline):
-    # one evaluation per window function, plain columns into the fold
-    nbrs = sized.select(
-        "doc_id",
-        "is_b",
-        "p",
-        "s64",
-        F.lag("s64").over(wg).alias("prev_s"),
-        F.lead("s64").over(wg).alias("next_s"),
-    )
-    credited = (
-        nbrs.select(
-            "doc_id",
-            "is_b",
-            "p",
-            F.greatest(
-                F.coalesce(
-                    _lcp_expr(F.col("s64"), F.col("prev_s")),
-                    F.lit(0),
-                ),
-                F.coalesce(
-                    _lcp_expr(F.col("s64"), F.col("next_s")),
-                    F.lit(0),
-                ),
-            ).alias("lcp"),
-        )
-        .filter("is_b")
-        .drop("is_b")
-    )
+    credited = _credit_gram_groups(allpos, "is_b").filter("is_b")
     clean_batch = batch_docs.filter(F.length("text") > 0)
     return _apply_span_cut(
         clean_batch, _ranges_from_credited(credited), keep_text=True
     )
+
+
+# The delta rows of the global rewrite replay: base documents stay
+# unrewritten, delta documents are cut against base AND delta text.
+_DELTA_RW_ORACLE = f"""
+WITH full_rw AS ({_SA_REWRITE_ORACLE})
+SELECT * FROM full_rw
+WHERE ({u60_sql("CAST(doc_id AS VARCHAR)")} % 100) >= 90
+"""
 
 
 @register(
@@ -2462,16 +2150,17 @@ def span_rewrite_batch(
 def dedup_span_rewrite_delta_gramidx(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The incremental exact span rewrite riding the PERSISTED
-    bucketed gram index — the artifact form
-    ``dedup_span_rewrite_delta``'s docstring promises: the base slice
-    is indexed once (build_gram_index, parquet partitioned by
-    gb = hash(24-gram)), and the arriving 10% slice probes only its
-    own gram buckets ((gb, g) join, dynamic-partition-pruned —
-    plan-asserted in tests/test_plans.py), so base text is never
-    rescanned at delta time. Same oracle as the query form: the
-    global-rewrite replay filtered to delta docs — a hash match
-    proves artifact probe ≡ corpus rescan."""
+    """Incremental exact span removal riding the PERSISTED bucketed
+    gram index: rewrite only the ARRIVING slice (hash-mod 10%, the
+    engine's delta convention) against the full standing corpus — a
+    delta document's spans are detected against base AND delta text,
+    but base documents are not rewritten. The base slice is indexed
+    once (build_gram_index, parquet partitioned by gb = hash(24-gram)),
+    and the delta probes only its own gram buckets ((gb, g) join,
+    dynamic-partition-pruned — plan-asserted in tests/test_plans.py),
+    so base text is never rescanned at delta time. The oracle is the
+    global-rewrite replay filtered to delta docs — a hash match proves
+    artifact probe ≡ corpus rescan."""
     path = build_gram_index(spark, sf_dir)
     idx = read_gram_index(spark, path)
     docs = load_spread(spark, sf_dir, "documents").filter(

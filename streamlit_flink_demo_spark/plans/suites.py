@@ -656,14 +656,11 @@ _suite(
     ],
 )
 
-# The capped-LCP equivalence ladder (operators/suffix.py) proves the
-# capsort and gram-group tiers row-identical to the suffix-array tier,
-# so ONE oracle (the SA replay, shared by both members and materialized
-# once) value-checks both production tiers — the suite runs each tier's
-# REAL distributed plan. The SA tier itself stays off the surface on
-# purpose: its sf0.1 construction cost (~55 s, SCALE.md) is index-build
-# work that would drown the bench's probe-cost envelope; it remains
-# oracle-checked at sf0.001/0.01 by tests/test_oracle_parity.py.
+# Exact span removal has one algorithm (operators/suffix.py): positions
+# grouped by their exact 24-char prefix, each credited with the longest
+# common prefix it shares with a sorted neighbour in its group. Its
+# oracle replays the brute-force suffix sort in DuckDB, so the one
+# member is checked against true suffix order, not against itself.
 _SPAN_COLS = {
     c: c
     for c in (
@@ -677,14 +674,11 @@ _suite(
     "tier STRING, doc_id BIGINT, orig_chars BIGINT, clean_chars BIGINT, "
     "n_spans_removed BIGINT, chars_removed BIGINT, clean_md5 STRING",
     ("dedup", "suffix", "span", "suite"),
-    """Exact Lee-et-al-style duplicated-span removal, BOTH production
-    tiers on one surface name: the capped range-sort tier (one global
-    range-partitioned sort of 64-char capped suffixes) and the
-    gram-group tier (ONE hash exchange on the seed 24-gram plus a
-    bounded window, no global sort, the 100 TB default). Two real
-    distributed plans, one ground truth.""",
+    """Exact Lee-et-al-style duplicated-span removal: the gram-group
+    tier (ONE hash exchange on the seed 24-gram plus a bounded window,
+    no global sort), cut from every document and checked against the
+    brute-force suffix-array replay.""",
     [
-        ("capsort", "dedup_span_rewrite_capsort", _SPAN_COLS),
         ("gramgroup", "dedup_span_rewrite_gramgroup", _SPAN_COLS),
     ],
 )

@@ -20,6 +20,8 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -275,7 +277,10 @@ WHERE l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
 
 @register("q14_promo_effect", oracle=_Q14_ORACLE, tags=("tpch", "join"))
 def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14: conditional aggregation over a fact⋈dim join."""
+    """TPC-H Q14: conditional aggregation over a fact⋈dim join. The
+    ×100 is a DECIMAL multiply of the exact promo sum, rounded to
+    double once — the oracle's order; scaling the already-rounded
+    double rounds twice and can land one ulp away."""
     l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-09-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-10-01").cast("timestamp"))
@@ -287,8 +292,10 @@ def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
         l.join(p, F.col("l_partkey") == F.col("p_partkey"))
         .agg(
             (
-                F.lit(100.0)
-                * F.sum(promo.cast("DECIMAL(18,6)")).cast("double")
+                (
+                    F.lit(Decimal("100.00"))
+                    * F.sum(promo.cast("DECIMAL(18,6)"))
+                ).cast("double")
                 / F.sum(disc.cast("DECIMAL(18,6)")).cast("double")
             ).alias("promo_revenue_pct")
         )

@@ -1,7 +1,7 @@
 """Ingest-time train-set contamination flagging over an eval stream.
 
 The streaming twin of the exact contamination check
-(``operators/suffix.contamination_sa_exact``): every arriving
+(``operators/suffix.contamination_capsort_exact``): every arriving
 micro-batch of EVAL documents is screened against the TRAIN corpus for
 character-exact leakage, at the door — the check a training pipeline
 runs when new benchmark/eval material arrives, so leaked spans are
@@ -11,11 +11,11 @@ Exactness without the index: a document is contaminated at threshold T
 (max character-exact span shared with any train doc ≥ T chars) IF AND
 ONLY IF it shares at least one T-char gram with the train corpus — so
 the per-batch screen probes the batch's T-grams against the distinct
-train-gram frame and the verdict is exact, not a sketch. The suffix
-array computes the full span LENGTH distribution (that is what
-``contamination_sa_exact`` reports); the ingest tier only needs the
-threshold verdict plus the contaminated-position count, which the gram
-probe gives at a fraction of the cost.
+train-gram frame and the verdict is exact, not a sketch. The batch
+query sorts every capped 64-char window to report the match LENGTH
+(that is what ``contamination_capsort_exact`` reports); the ingest
+tier only needs the threshold verdict plus the contaminated-position
+count, which the gram probe gives at a fraction of the cost.
 
 Scale shape (per batch): the batch is small by construction, so its
 gram frame BROADCASTS into the join against the train grams — per-

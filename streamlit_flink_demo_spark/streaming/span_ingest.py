@@ -1,16 +1,19 @@
 """Ingest-time exact repeated-span CLEANUP over a document stream.
 
-The streaming twin of ``operators/suffix.dedup_span_rewrite_delta``
-and the third door-check module (dedup_ingest flags near-dups,
+The streaming twin of
+``operators/suffix.dedup_span_rewrite_delta_gramidx`` and the third
+door-check module (dedup_ingest flags near-dups,
 contamination_ingest screens eval leakage — this one REWRITES):
 every arriving micro-batch of documents has its >=24-char spans that
 repeat anywhere in (standing corpus ∪ this batch) cut before the text
 lands, Lee-et-al cleanup applied at ingest instead of as a periodic
 batch pass.
 
-Exactness rides the gram-group argument (suffix.py): a position's
-credited repeat length is capped at 64 chars and thresholded at 24,
-so any qualifying partner shares the position's exact 24-char prefix.
+Each batch goes through ``suffix.span_rewrite_batch``, whose crediting
+is the one exact span-removal algorithm (``suffix._credit_gram_groups``):
+a position's credited repeat length is capped at 64 chars and
+thresholded at 24, so any qualifying partner shares the position's
+exact 24-char prefix.
 The standing corpus index is either built in-session at attach time
 (``corpus_docs`` — persisted (g, s64) frame) or, the production form,
 the PERSISTED bucketed gram-index artifact (``gram_index_path`` —

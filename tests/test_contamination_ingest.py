@@ -1,7 +1,7 @@
 """Streaming ingest-time contamination screening: stream flags equal
 the batch-computed flags (stream ≡ batch), the per-position counts
-equal the suffix-array operator's exact counts (two independent
-algorithms, one answer), planted leaks are caught, clean docs pass,
+equal the exact batch operator's counts (two independent algorithms,
+one answer), planted leaks are caught, clean docs pass,
 and delivery is exactly-once across a restart."""
 
 from __future__ import annotations
@@ -104,11 +104,12 @@ def test_stream_flags_equal_batch_flags(spark, tmp_path, split):
 
 def test_gram_counts_equal_suffix_array_counts(spark, sf_dir, split):
     """Two independent algorithms, one answer: the gram-probe position
-    count per eval doc equals contamination_sa_exact's suffix-array
-    nearest-train scan (a position matches ≥ T chars of some train doc
-    ⟺ its T-gram is in the train gram set)."""
+    count per eval doc equals contamination_capsort_exact's
+    nearest-train scan over the sorted 64-char windows, whose rows the
+    brute-force suffix-array oracle pins (a position matches ≥ T chars
+    of some train doc ⟺ its T-gram is in the train gram set)."""
     from streamlit_flink_demo_spark.operators.suffix import (
-        contamination_sa_exact,
+        contamination_capsort_exact,
     )
     from streamlit_flink_demo_spark.streaming.contamination_ingest import (
         contamination_flags_batch,
@@ -122,13 +123,13 @@ def test_gram_counts_equal_suffix_array_counts(spark, sf_dir, split):
             ev, corpus_train_grams(train)
         ).collect()
     }
-    sa = {
+    exact = {
         r["doc_id"]: r["n_contaminated_positions"]
-        for r in contamination_sa_exact(spark, sf_dir).collect()
+        for r in contamination_capsort_exact(spark, sf_dir).collect()
     }
-    # the SA operator drops zero-length docs; the probe includes them
-    # (zero positions, clean) — compare on the SA's doc set
-    assert sa and all(probe[k] == v for k, v in sa.items())
+    # the batch operator drops zero-length docs; the probe includes
+    # them (zero positions, clean) — compare on the batch's doc set
+    assert exact and all(probe[k] == v for k, v in exact.items())
 
 
 def test_planted_leak_is_caught(spark, tmp_path, split):

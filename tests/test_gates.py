@@ -4,9 +4,8 @@ Three gates switch a plan shape on a size no test corpus reaches:
 
 - ``plans/tpch3._Q21_BCAST_ORDERS_BYTES``: q21's two orders-side
   broadcast hints hold only while the orders source is small;
-- ``operators/suffix._PREFILTER_DOCS_BYTES``: the shared dup-gram
-  prefilter of the capsort and gram-group span-rewrite tiers is skipped
-  above it;
+- ``operators/suffix._PREFILTER_DOCS_BYTES``: the gram-group span
+  rewrite's dup-gram prefilter is skipped above it;
 - ``operators/suffix._SA_BCAST_ACTIVE``: a prefix-doubling round
   broadcasts its rank lookup only while the active set is below it.
 
@@ -24,7 +23,7 @@ import pytest
 
 from streamlit_flink_demo_spark.operators import suffix
 from streamlit_flink_demo_spark.plans import load_all, tpch3
-from tests.test_oracle_parity import canon, duck_con
+from tests.test_oracle_parity import assert_uncached_parity
 
 REG = load_all(exposed_only=False)
 
@@ -32,31 +31,13 @@ REG = load_all(exposed_only=False)
 # corpus_longest_repeat_indexed reads the persisted suffix-index
 # artifact instead, which is built once per corpus fingerprint.
 _SA_QUERIES = [
-    "contamination_sa_exact",
     "corpus_distinct_substrings",
     "corpus_longest_repeat",
     "corpus_longest_repeat_sharded",
     "corpus_suffix_array",
     "corpus_suffix_array_append",
     "corpus_suffix_array_sharded",
-    "dedup_sa_span_rewrite",
-    "dedup_sa_span_rewrite_sharded",
 ]
-
-
-def _assert_oracle_parity(spark, sf_dir, name):
-    rq = REG[name]
-    sdf = rq.fn.__wrapped__(spark, sf_dir)  # bypass _PLAN_CACHE
-    got = canon([tuple(r) for r in sdf.collect()], sdf.columns)
-    con = duck_con(sf_dir)
-    try:
-        res = con.execute(rq.oracle)
-        cols = [d[0] for d in res.description]
-        want = canon([tuple(r) for r in res.fetchall()], cols)
-    finally:
-        con.close()
-    assert sorted(sdf.columns) == sorted(cols)
-    assert got == want, f"{name}: gated branch disagrees with the oracle"
 
 
 def _broadcast_hints(df) -> int:
@@ -72,17 +53,15 @@ def test_q21_without_orders_broadcast_hints(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(tpch3, "_Q21_BCAST_ORDERS_BYTES", -1)
     # gated: only the supplier dimension keeps its hint
     assert _broadcast_hints(fn(spark, sf_dir)) == 1
-    _assert_oracle_parity(spark, sf_dir, "q21_waiting_suppliers")
+    assert_uncached_parity(spark, sf_dir, "q21_waiting_suppliers")
 
 
-@pytest.mark.parametrize(
-    "name", ["dedup_span_rewrite_capsort", "dedup_span_rewrite_gramgroup"]
-)
+@pytest.mark.parametrize("name", ["dedup_span_rewrite_gramgroup"])
 def test_span_rewrite_without_dup_gram_prefilter(
     spark, sf_dir, monkeypatch, name
 ):
     monkeypatch.setattr(suffix, "_PREFILTER_DOCS_BYTES", -1)
-    _assert_oracle_parity(spark, sf_dir, name)
+    assert_uncached_parity(spark, sf_dir, name)
 
 
 @pytest.fixture(scope="module")
@@ -99,4 +78,4 @@ def sa_shuffle_lookups():
 def test_suffix_array_without_broadcast_lookup(
     spark, sf_dir, sa_shuffle_lookups, name
 ):
-    _assert_oracle_parity(spark, sf_dir, name)
+    assert_uncached_parity(spark, sf_dir, name)

@@ -94,17 +94,14 @@ def test_unpushed_filter_detected(spark, sf_dir, tmp_path):
         "ann_lsh_multiprobe_topk",
         "docs_chunk_overlap",
         "docs_chunk_embed_search",
-        "dedup_sa_span_rewrite_sharded",
         "ann_filtered_topk",
         "dedup_minhash_calibration",
         "docs_leakage_safe_split",
         # round-10 fourth session
-        "dedup_span_rewrite_capsort",
         "docs_logreg_classifier",
         "events_zorder_skipping",
         "contamination_capsort_exact",
         "dedup_span_rewrite_gramgroup",
-        "dedup_span_rewrite_delta",
         # round 11
         "docs_chunk_ann_search",
         "docs_chunk_ann_multiprobe",

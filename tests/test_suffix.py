@@ -1,11 +1,13 @@
-"""Distributed prefix-doubling suffix array (operators/suffix.py).
+"""Distributed prefix-doubling suffix array and the exact span-removal
+and contamination queries (operators/suffix.py).
 
 Full-corpus parity vs the brute-force sort-the-suffixes oracle is in
-tests/test_oracle_parity.py (corpus_suffix_array); these tests pin the
-construction on adversarial shapes parity's synthetic corpus may not
-hit: duplicate documents (tied suffixes at every position), documents
-shorter than the seed key, single-char docs, and the permutation
-property of the final ranks.
+tests/test_oracle_parity.py; these tests pin the construction on
+adversarial shapes parity's synthetic corpus may not hit: duplicate
+documents (tied suffixes at every position), documents shorter than
+the seed key, single-char docs, and the permutation property of the
+final ranks. The span rewrite and the contamination query are held to
+the same DuckDB oracle on planted corpora.
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from streamlit_flink_demo_spark.operators.suffix import (
+    _LCP_CAP,
     _SA_SEED,
     suffix_ranks,
 )
@@ -124,88 +127,135 @@ def test_sharded_ranks_match_per_shard_brute_force(spark, n_shards):
             assert got[(d, p)] == (s, rank), (d, p, s)
 
 
-def test_sa_span_rewrite_on_planted_repeats(spark, tmp_path):
-    """A 30-char block duplicated across two docs must be cut from
-    both (the aggressive exact tier removes every occurrence); the
-    unique doc passes through byte-identical."""
-    import hashlib
-    import os
-
-    from streamlit_flink_demo_spark.plans import REGISTRY
-
-    block = "copied paragraph of thirty chars!!"  # 34 chars, >= 24
-    rows = [
-        (1, "alpha start " + block + " tail one xyzzy"),
-        (2, "other intro " + block + " closing words two"),
-        (3, "entirely unique text with no repeated spans at all qwertyu"),
-    ]
+def _write_corpus(spark, tmp_path, rows: list[tuple[int, str]]) -> str:
+    """A corpus directory holding only documents.parquet."""
     d = str(tmp_path / "corpus")
     os.makedirs(d)
     spark.createDataFrame(rows, "doc_id bigint, text string").write.mode(
         "overwrite"
     ).parquet(os.path.join(d, "documents.parquet"))
+    return d
+
+
+def _oracle_rows(spark, d: str, name: str) -> dict:
+    """``name``'s rows over the corpus at ``d`` by doc_id, after
+    requiring them equal to its DuckDB oracle (the brute-force suffix
+    sort replay for the span-removal and contamination queries)."""
+    from tests.test_oracle_parity import assert_uncached_parity
+
+    rows = assert_uncached_parity(spark, d, name, tables=("documents",))
+    return {r.doc_id: r for r in rows}
+
+
+_BLOCK = "copied paragraph of thirty chars!!"  # 34 chars, >= 24
+_LONG = "Z" * (_LCP_CAP + 30)  # a repeat saturating the 64-char cap
+_SHARED64 = "s" * (_LCP_CAP + 5)  # a shared 64-char prefix...
+_EXACT24 = "q" * 23 + "X"  # a repeat of exactly 24 chars
+_CAP_ROWS = [
+    (1, "intro " + _LONG + " middle " + _SHARED64 + "AAAA tail"),
+    # ...with a different tail: capped-window order differs from true
+    # suffix order here
+    (2, _LONG + " other " + _SHARED64 + "BBBB different end"),
+    (3, "short dup short dup"),  # sub-threshold (< 24): untouched
+    (4, "wholly unique document body with nothing repeated at all"),
+    (5, _SHARED64 + "AAAA tail"),  # exact-suffix tie with doc 1's end
+]
+
+# (rows, {doc cut: min chars removed}, docs left byte-identical)
+_PLANTED_REWRITES = {
+    "block_in_two_docs": (
+        [
+            (1, "alpha start " + _BLOCK + " tail one xyzzy"),
+            (2, "other intro " + _BLOCK + " closing words two"),
+            (3, "entirely unique text with no repeated spans at all qwertyu"),
+        ],
+        {1: len(_BLOCK), 2: len(_BLOCK)},
+        {3},
+    ),
+    "cap_saturation_and_shared64": (_CAP_ROWS, {1: len(_LONG), 2: len(_LONG)}, {3, 4}),
+    # the gram-group boundary itself: docs 6 and 7 share _EXACT24 and
+    # nothing longer (the differing neighbour chars are asserted below)
+    "exact24_boundary": (
+        _CAP_ROWS
+        + [
+            (6, "first copy A" + _EXACT24 + "B here padding abcdef"),
+            (7, "second copy C" + _EXACT24 + "D there padding ghijk"),
+        ],
+        {6: 24, 7: 24},
+        {3, 4},
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_PLANTED_REWRITES))
+def test_gramgroup_rewrite_matches_oracle_on_planted_corpus(
+    spark, tmp_path, case
+):
+    """dedup_span_rewrite_gramgroup equals the brute-force suffix-array
+    oracle on planted shapes the synthetic corpus may not hit: a
+    34-char block in two docs, repeats longer than the 64-char cap,
+    pairs sharing a full 64-char prefix with different tails, an
+    exact-suffix tie, sub-threshold repeats, and a repeat of exactly
+    24 chars. Repeated regions are cut from every occurrence; unique
+    docs pass through byte-identical."""
+    import hashlib
+
+    rows, cut, kept = _PLANTED_REWRITES[case]
+    if case == "exact24_boundary":
+        assert _longest_shared_prefix([r for r in rows if r[0] in cut]) == 24
+    text = dict(rows)
+    out = _oracle_rows(
+        spark, _write_corpus(spark, tmp_path, rows), "dedup_span_rewrite_gramgroup"
+    )
+    for r in out.values():
+        assert r.clean_chars == r.orig_chars - r.chars_removed
+    for doc_id, n in cut.items():
+        assert out[doc_id].chars_removed >= n
+        md5 = hashlib.md5(text[doc_id].encode()).hexdigest()
+        assert out[doc_id].clean_md5 != md5
+    for doc_id in kept:
+        assert out[doc_id].n_spans_removed == 0
+        md5 = hashlib.md5(text[doc_id].encode()).hexdigest()
+        assert out[doc_id].clean_md5 == md5
+
+
+def test_delta_rewrite_sees_base_repeats(spark):
+    """A delta doc sharing a >=24-char block ONLY with a BASE doc must
+    still have it cut: span_rewrite_batch credits batch positions
+    against the base index's gram groups, and rewrites only the
+    batch."""
+    from streamlit_flink_demo_spark.operators.suffix import (
+        gram_positions,
+        span_rewrite_batch,
+    )
+
+    block = "the shared thirty-char block!!!!"  # 32 chars
+    schema = "doc_id bigint, text string"
+    base = spark.createDataFrame(
+        [(1, "base text holds " + block + " and more words")], schema
+    )
+    delta = spark.createDataFrame(
+        [(2, "delta arrival with " + block + " trailing text")], schema
+    )
     out = {
         r.doc_id: r
-        for r in REGISTRY["dedup_sa_span_rewrite"].fn.__wrapped__(
-            spark, d
-        ).collect()
+        for r in span_rewrite_batch(delta, gram_positions(base)).collect()
     }
-    assert out[1].chars_removed >= len(block)
+    assert set(out) == {2}  # only the arriving doc is rewritten
     assert out[2].chars_removed >= len(block)
-    assert out[1].clean_chars == out[1].orig_chars - out[1].chars_removed
-    # the duplicated block is gone from both rewritten docs: the md5
-    # can't equal the original text's
-    for doc_id, text in rows[:2]:
-        assert out[doc_id].clean_md5 != hashlib.md5(text.encode()).hexdigest()
-    # unique doc untouched
-    assert out[3].n_spans_removed == 0
-    assert out[3].clean_md5 == hashlib.md5(rows[2][1].encode()).hexdigest()
+    assert block not in out[2].clean_text
 
 
-def test_longest_repeat_on_planted_duplicates(spark, tmp_path):
-    """Duplicate documents: every position's suffix recurs verbatim,
-    so max_repeat = min(doc_len, cap); a unique-text doc's repeats
-    stay short."""
-    import os
-
-    from streamlit_flink_demo_spark.operators.suffix import _LCP_CAP
-    from streamlit_flink_demo_spark.plans import REGISTRY
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog again and again"),
-        (2, "the quick brown fox jumps over the lazy dog again and again"),
-        (3, "zq xv jk wp mn bf unique gibberish entirely elsewhere absent"),
-    ]
-    d = str(tmp_path / "corpus")
-    os.makedirs(d)
-    spark.createDataFrame(rows, "doc_id bigint, text string").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(d, "documents.parquet"))
-    out = {
-        r.doc_id: (r.max_repeat, r.n_long_positions)
-        for r in REGISTRY["corpus_longest_repeat"].fn.__wrapped__(
-            spark, d
-        ).collect()
-    }
-    cap = min(len(rows[0][1]), _LCP_CAP)
-    assert out[1][0] == cap and out[2][0] == cap
-    assert out[1][1] > 0  # long duplicated positions detected
-    assert out[3][0] < 24  # unique doc: no long repeat
-    assert out[3][1] == 0
-
-
-def test_sa_contamination_on_planted_eval_copy(spark, tmp_path):
-    """An eval doc copied verbatim from a train doc must report
-    max_train_match = min(len, cap); a unique eval doc stays below
-    the 24-char threshold. doc_ids are picked so the 90/10 hash split
-    puts them on the intended sides; with ~tiny input spread over 32
-    range partitions the nearest-train scan's cross-partition boundary
-    fill is exercised on nearly every row."""
-    import os
-
+def test_capsort_contamination_on_planted_eval_copy(spark, tmp_path):
+    """contamination_capsort_exact equals the brute-force suffix-array
+    oracle on a planted corpus: an eval doc copied verbatim from a
+    train doc reports max_train_match = min(len, cap); a unique eval
+    doc stays below the 24-char threshold. doc_ids are picked so the
+    90/10 hash split puts them on the intended sides. AQE would
+    coalesce the tiny input's range partitions into one; with
+    coalescing off it spans several (asserted), so the nearest-train
+    scan's cross-partition boundary fill runs."""
     from streamlit_flink_demo_spark.functions.hashing import u60
-    from streamlit_flink_demo_spark.operators.suffix import _LCP_CAP
-    from streamlit_flink_demo_spark.plans import REGISTRY
 
     # find concrete ids on each side of the split
     ids = spark.createDataFrame(
@@ -225,23 +275,52 @@ def test_sa_contamination_on_planted_eval_copy(spark, tmp_path):
         (eval_ids[0], "eval preamble " + shared + " eval tail words"),
         (eval_ids[1], "wq zx vb nm completely novel eval only content"),
     ]
-    d = str(tmp_path / "corpus")
-    os.makedirs(d)
-    spark.createDataFrame(rows, "doc_id bigint, text string").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(d, "documents.parquet"))
+    d = _write_corpus(spark, tmp_path, rows)
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    prior = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        n_parts = (
+            spark.range(sum(len(t) for _, t in rows))
+            .repartitionByRange("id")
+            .select(F.spark_partition_id())
+            .distinct()
+            .count()
+        )
+        assert n_parts > 1, "the boundary fill needs several range partitions"
+        out = _oracle_rows(spark, d, "contamination_capsort_exact")
+    finally:
+        spark.conf.set(coalesce, prior)
+    assert set(out) == set(eval_ids)
+    assert out[eval_ids[0]].max_train_match >= min(len(shared), _LCP_CAP)
+    assert out[eval_ids[0]].n_contaminated_positions > 0
+    assert out[eval_ids[1]].max_train_match < 24
+    assert out[eval_ids[1]].n_contaminated_positions == 0
 
+
+def test_longest_repeat_on_planted_duplicates(spark, tmp_path):
+    """Duplicate documents: every position's suffix recurs verbatim,
+    so max_repeat = min(doc_len, cap); a unique-text doc's repeats
+    stay short."""
+    from streamlit_flink_demo_spark.plans import REGISTRY
+
+    rows = [
+        (1, "the quick brown fox jumps over the lazy dog again and again"),
+        (2, "the quick brown fox jumps over the lazy dog again and again"),
+        (3, "zq xv jk wp mn bf unique gibberish entirely elsewhere absent"),
+    ]
+    d = _write_corpus(spark, tmp_path, rows)
     out = {
-        r.doc_id: (r.max_train_match, r.n_contaminated_positions)
-        for r in REGISTRY["contamination_sa_exact"].fn.__wrapped__(
+        r.doc_id: (r.max_repeat, r.n_long_positions)
+        for r in REGISTRY["corpus_longest_repeat"].fn.__wrapped__(
             spark, d
         ).collect()
     }
-    assert set(out) == set(eval_ids)
-    assert out[eval_ids[0]][0] >= min(len(shared), _LCP_CAP)
-    assert out[eval_ids[0]][1] > 0
-    assert out[eval_ids[1]][0] < 24
-    assert out[eval_ids[1]][1] == 0
+    cap = min(len(rows[0][1]), _LCP_CAP)
+    assert out[1][0] == cap and out[2][0] == cap
+    assert out[1][1] > 0  # long duplicated positions detected
+    assert out[3][0] < 24  # unique doc: no long repeat
+    assert out[3][1] == 0
 
 
 def test_suffix_artifact_roundtrip_freshness_force(
@@ -337,96 +416,6 @@ def test_suffix_artifact_serves_adjacency_reads(
     assert from_disk == from_memo
 
 
-def test_capsort_rewrite_equals_sa_rewrite(spark, tmp_path):
-    """dedup_span_rewrite_capsort (one 64-char-key sort, no prefix
-    doubling) must be row-for-row identical to dedup_sa_span_rewrite
-    (full suffix-array tier) — the equivalence the capped-sort tier's
-    docstring argues. The planted corpus stresses exactly where the
-    two orders diverge: repeats LONGER than the 64-char cap (cap
-    saturation), pairs sharing a full 64-char prefix with DIFFERENT
-    tails (s64-sorted adjacency differs from true SA adjacency), and
-    sub-threshold repeats that must be ignored by both."""
-    import os
-
-    from streamlit_flink_demo_spark.operators.suffix import _LCP_CAP
-    from streamlit_flink_demo_spark.plans import REGISTRY
-
-    long_block = "Z" * (_LCP_CAP + 30)  # repeat saturating the cap
-    shared64 = "s" * (_LCP_CAP + 5)  # 64-char shared prefix...
-    rows = [
-        (1, "intro " + long_block + " middle " + shared64 + "AAAA tail"),
-        (2, long_block + " other " + shared64 + "BBBB different end"),
-        (3, "short dup short dup"),  # sub-threshold (< 24): untouched
-        (4, "wholly unique document body with nothing repeated at all"),
-        (5, shared64 + "AAAA tail"),  # exact-suffix tie with doc 1's end
-    ]
-    d = str(tmp_path / "corpus")
-    os.makedirs(d)
-    spark.createDataFrame(rows, "doc_id bigint, text string").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(d, "documents.parquet"))
-    sa = sorted(
-        tuple(r)
-        for r in REGISTRY["dedup_sa_span_rewrite"].fn.__wrapped__(
-            spark, d
-        ).collect()
-    )
-    cs = sorted(
-        tuple(r)
-        for r in REGISTRY["dedup_span_rewrite_capsort"].fn.__wrapped__(
-            spark, d
-        ).collect()
-    )
-    assert cs == sa
-    by_doc = {t[0]: t for t in cs}
-    assert by_doc[3][3] == 0  # n_spans_removed: sub-threshold repeat kept
-    assert by_doc[4][3] == 0
-    assert by_doc[1][4] > 0 and by_doc[2][4] > 0  # chars_removed
-
-
-def test_capsort_rewrite_equals_sa_rewrite_on_corpus(spark, sf_dir):
-    """Same equivalence on the real synthetic corpus (natural-text
-    shapes: no planted structure, organic shingle repeats)."""
-    from streamlit_flink_demo_spark.plans import REGISTRY
-
-    sa = sorted(
-        tuple(r)
-        for r in REGISTRY["dedup_sa_span_rewrite"].fn.__wrapped__(
-            spark, sf_dir
-        ).collect()
-    )
-    cs = sorted(
-        tuple(r)
-        for r in REGISTRY["dedup_span_rewrite_capsort"].fn.__wrapped__(
-            spark, sf_dir
-        ).collect()
-    )
-    assert cs == sa
-
-
-def test_capsort_contamination_equals_sa_contamination(spark, sf_dir):
-    """contamination_capsort_exact (one 64-char-window sort) must be
-    row-identical to contamination_sa_exact (full SA tier) — the
-    nearest-train-neighbor property holds in the capped order because
-    the reported match length is itself capped at 64."""
-    from streamlit_flink_demo_spark.plans import REGISTRY
-
-    sa = sorted(
-        tuple(r)
-        for r in REGISTRY["contamination_sa_exact"].fn.__wrapped__(
-            spark, sf_dir
-        ).collect()
-    )
-    cs = sorted(
-        tuple(r)
-        for r in REGISTRY["contamination_capsort_exact"].fn.__wrapped__(
-            spark, sf_dir
-        ).collect()
-    )
-    assert cs == sa
-    assert sa, "expected eval docs"
-
-
 def _credited_max_lcp(order_key, rows, cap):
     """Per-position credited repeat length from adjacent pairs in the
     given sort order: sort (key, doc, p), credit both endpoints of
@@ -445,8 +434,9 @@ def _credited_max_lcp(order_key, rows, cap):
 
 
 def test_capped_order_equivalence_property():
-    """The mathematical core of the capsort tier, pinned by property
-    test: for random corpora over a tiny alphabet (maximally tied
+    """The mathematical core of contamination_capsort_exact (one sort
+    of the capped windows instead of the suffix array), pinned by
+    property test: for random corpora over a tiny alphabet (maximally tied
     suffixes), per-position max-LCP capped at C is IDENTICAL whether
     adjacency comes from FULL suffix order or from the C-char-window
     order. Tiny alphabet + short cap stresses ties, cap saturation,
@@ -478,73 +468,9 @@ def test_capped_order_equivalence_property():
     run()
 
 
-def test_gramgroup_rewrite_equals_both_exact_tiers(spark, tmp_path):
-    """The gram-group tier (hash-group by 24-prefix, in-group sort)
-    must match the SA tier row-for-row on the adversarial planted
-    corpus — cap-saturating repeats, shared-64-prefix divergent
-    tails, sub-threshold repeats, exact-suffix ties — plus a case the
-    other tiers' tests don't isolate: a repeat of EXACTLY 24 chars
-    (the group boundary itself)."""
-    import os
-
-    from streamlit_flink_demo_spark.operators.suffix import _LCP_CAP
-    from streamlit_flink_demo_spark.plans import REGISTRY
-
-    long_block = "Z" * (_LCP_CAP + 30)
-    shared64 = "s" * (_LCP_CAP + 5)
-    exact24 = "q" * 23 + "X"  # 24-char block, nothing beyond
-    rows = [
-        (1, "intro " + long_block + " middle " + shared64 + "AAAA tail"),
-        (2, long_block + " other " + shared64 + "BBBB different end"),
-        (3, "short dup short dup"),
-        (4, "wholly unique document body with nothing repeated at all"),
-        (5, shared64 + "AAAA tail"),
-        (6, "first copy " + exact24 + " here padding abcdef"),
-        (7, "second copy " + exact24 + " there padding ghijk"),
-    ]
-    d = str(tmp_path / "corpus")
-    os.makedirs(d)
-    spark.createDataFrame(rows, "doc_id bigint, text string").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(d, "documents.parquet"))
-    sa = sorted(
-        tuple(r)
-        for r in REGISTRY["dedup_sa_span_rewrite"].fn.__wrapped__(
-            spark, d
-        ).collect()
-    )
-    gg = sorted(
-        tuple(r)
-        for r in REGISTRY["dedup_span_rewrite_gramgroup"].fn.__wrapped__(
-            spark, d
-        ).collect()
-    )
-    assert gg == sa
-    by_doc = {t[0]: t for t in gg}
-    assert by_doc[6][4] >= 24 and by_doc[7][4] >= 24  # exact-24 cut
-    assert by_doc[3][3] == 0 and by_doc[4][3] == 0
-
-
-def test_gramgroup_rewrite_equals_sa_rewrite_on_corpus(spark, sf_dir):
-    from streamlit_flink_demo_spark.plans import REGISTRY
-
-    sa = sorted(
-        tuple(r)
-        for r in REGISTRY["dedup_sa_span_rewrite"].fn.__wrapped__(
-            spark, sf_dir
-        ).collect()
-    )
-    gg = sorted(
-        tuple(r)
-        for r in REGISTRY["dedup_span_rewrite_gramgroup"].fn.__wrapped__(
-            spark, sf_dir
-        ).collect()
-    )
-    assert gg == sa
-
-
 def test_gramgroup_threshold_equivalence_property():
-    """The gram-group tier's claim, property-tested without Spark:
+    """The claim behind _credit_gram_groups, property-tested without
+    Spark:
     crediting ONLY within exact T-char-prefix groups (in-group sorted
     adjacency) recovers exactly the positions whose global capped
     max-LCP >= T, with exactly that max value. Random two-letter
@@ -589,72 +515,6 @@ def test_gramgroup_threshold_equivalence_property():
         assert got == want
 
     run()
-
-
-def test_delta_rewrite_is_the_delta_slice_of_the_global_rewrite(
-    spark, sf_dir
-):
-    """dedup_span_rewrite_delta's rows must equal the global
-    gram-group rewrite restricted to the delta (hash >= 90) docs —
-    i.e. the pruned increment loses nothing the full pass would
-    find."""
-    from pyspark.sql import functions as F
-
-    from streamlit_flink_demo_spark.functions.hashing import u60
-    from streamlit_flink_demo_spark.plans import REGISTRY
-
-    full = REGISTRY["dedup_span_rewrite_gramgroup"].fn.__wrapped__(
-        spark, sf_dir
-    )
-    is_delta = (u60(F.col("doc_id").cast("string")) % 100) >= 90
-    want = sorted(tuple(r) for r in full.filter(is_delta).collect())
-    got = sorted(
-        tuple(r)
-        for r in REGISTRY["dedup_span_rewrite_delta"].fn.__wrapped__(
-            spark, sf_dir
-        ).collect()
-    )
-    assert got == want
-    assert got, "expected delta docs"
-
-
-def test_delta_rewrite_sees_base_repeats(spark, tmp_path):
-    """A delta doc sharing a >=24-char block ONLY with a BASE doc must
-    still have it cut — the semi-join prune keeps whole groups, so
-    base partners stay visible to delta positions."""
-    import os
-
-    from streamlit_flink_demo_spark.functions.hashing import u60
-    from streamlit_flink_demo_spark.plans import REGISTRY
-    from pyspark.sql import functions as F
-
-    block = "the shared thirty-char block!!!!"  # 32 chars
-    # find ids on each side of the hash split
-    probe = spark.createDataFrame(
-        [(i,) for i in range(1, 200)], "doc_id bigint"
-    ).select(
-        "doc_id", ((u60(F.col("doc_id").cast("string")) % 100) >= 90).alias("d")
-    )
-    ids = {r.doc_id: r.d for r in probe.collect()}
-    base_id = next(i for i, d in sorted(ids.items()) if not d)
-    delta_id = next(i for i, d in sorted(ids.items()) if d)
-    rows = [
-        (base_id, "base text holds " + block + " and more words"),
-        (delta_id, "delta arrival with " + block + " trailing text"),
-    ]
-    d = str(tmp_path / "corpus")
-    os.makedirs(d)
-    spark.createDataFrame(rows, "doc_id bigint, text string").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(d, "documents.parquet"))
-    out = {
-        r.doc_id: r
-        for r in REGISTRY["dedup_span_rewrite_delta"].fn.__wrapped__(
-            spark, d
-        ).collect()
-    }
-    assert set(out) == {delta_id}  # only the arriving doc is rewritten
-    assert out[delta_id].chars_removed >= len(block)
 
 
 def test_suffix_artifact_document_takedown(

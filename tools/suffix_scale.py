@@ -30,11 +30,8 @@ OPS = (
     "corpus_suffix_array_sharded",
     "corpus_longest_repeat",
     "corpus_longest_repeat_sharded",
-    "dedup_sa_span_rewrite",
-    "contamination_sa_exact",
     "corpus_suffix_array_append",
     "corpus_distinct_substrings",
-    "dedup_span_rewrite_capsort",
     "dedup_span_rewrite_gramgroup",
     "contamination_capsort_exact",
     "docs_logreg_classifier",

@@ -63,7 +63,8 @@ class StatementsHTTPServer:
         service: StatementsService,
         host: str = "127.0.0.1",
         port: int = 0,
-        page_size: int = 100,
+        # 10% of the ResultBuffer ring: one GET drains a microbatch
+        page_size: int = 10_000,
     ):
         self.service = service
         self.page_size = page_size

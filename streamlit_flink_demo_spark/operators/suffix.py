@@ -1532,7 +1532,11 @@ def contamination_capsort_exact(
         "p",
         F.col("text").substr(F.col("p") + 1, F.lit(_LCP_CAP)).alias("s64"),
     )
-    ranked = _global_group_rank(pos, ["s64", "doc_id", "p"]).select(
+    # (doc_id, p) is unique per row, so the min-over-group exchange is
+    # the identity and is skipped
+    ranked = _global_group_rank(
+        pos, ["s64", "doc_id", "p"], unique=True
+    ).select(
         "doc_id",
         "p",
         "s64",

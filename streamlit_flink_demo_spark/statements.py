@@ -34,7 +34,6 @@ from collections.abc import Iterator
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.errors import StreamingQueryException
 from pyspark.sql import SparkSession
 
 from streamlit_flink_demo_spark.streaming.emitter import (
@@ -604,45 +603,19 @@ class StatementsService:
                     # emitter snapshot so restart recovery is
                     # consistent: Spark replays at most the last
                     # uncommitted batch, the emitter's batch-id dedup
-                    # makes re-emission exactly-once. It keeps Spark's
-                    # default FileContext checkpoint manager, whose
-                    # non-overwriting rename is what detects a second
-                    # writer on a recovery checkpoint.
+                    # makes re-emission exactly-once.
                     writer = writer.option(
                         "checkpointLocation", os.path.join(checkpoint_dir, "spark")
                     )
                 else:
                     # Ephemeral statement (no recovery contract): its
                     # WAL/offset/state checkpoint is a per-statement
-                    # dir with exactly one writer — on tmpfs when
-                    # available, else Spark's own throwaway dir under
-                    # java.io.tmpdir. Removed in stop().
-                    #
-                    # It runs on the FileSystem-based checkpoint
-                    # manager. Without libhadoop, Hadoop's local
-                    # filesystem has no native IO, so the default
-                    # FileContext manager forks a `readlink`
-                    # subprocess for every rename (getFileLinkStatus)
-                    # and a `chmod` for every create: ~40 process
-                    # spawns per microbatch across sources/, offsets/,
-                    # commits/ and state/, all on the trigger's
-                    # critical path. perfbench retract_drain --trace 1,
-                    # local[4], medians of 3 runs: latest_offset /
-                    # wal_commit / commit_offsets 44 / 37 / 38 ms →
-                    # 14 / 10 / 10 ms, trigger 379 → 274 ms. The
-                    # FileSystem manager's exists-then-rename is not
-                    # atomic against a second writer, which a
-                    # one-writer temp dir never has; durable
-                    # statements (above) and the streaming/*_ingest.py
-                    # pipelines, whose checkpoints a later run
-                    # recovers, keep FileContext. Checkpoint file
-                    # checksums stay on either way.
-                    start_conf[
-                        "spark.sql.streaming.checkpointFileManagerClass"
-                    ] = (
-                        "org.apache.spark.sql.execution.streaming."
-                        "checkpointing.FileSystemBasedCheckpointFileManager"
-                    )
+                    # dir — on tmpfs when available, else Spark's own
+                    # throwaway dir under java.io.tmpdir. Removed in
+                    # stop(). Both kinds run on Spark's default
+                    # FileContext checkpoint manager, over the
+                    # session's fork-free local filesystem
+                    # (session.py).
                     shm = "/dev/shm"
                     if os.path.isdir(shm) and os.access(shm, os.W_OK):
                         import tempfile
@@ -684,17 +657,6 @@ class StatementsService:
                                 ).start()
                             else:
                                 raise
-                        if not checkpoint_dir:
-                            # A file source builds its sources/ log from
-                            # the PARENT session's conf, in the query
-                            # thread, after start() returns: keep the
-                            # window open until the sources exist.
-                            try:
-                                stmt._query._jsq.streamingQuery().awaitInitialization(
-                                    30_000
-                                )
-                            except StreamingQueryException:
-                                pass  # died initializing: _sync_phase fails it
                     finally:
                         for k, v in prev.items():
                             if v is None:

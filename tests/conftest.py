@@ -25,3 +25,19 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def fork_census():
+    """tools/fork_census.py (tools/ is not a package)."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "fork_census",
+        os.path.join(
+            os.path.dirname(os.path.dirname(__file__)), "tools", "fork_census.py"
+        ),
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod

@@ -131,3 +131,37 @@ def test_continuous_statement_keepalive_and_delete(server, spark, tmp_path):
     with urllib.request.urlopen(req) as r:
         assert r.status == 200
     assert _get(f"{root}/{name}")["status"]["phase"] == "stopped"
+
+
+def test_default_page_drains_a_microbatch_in_one_get(spark):
+    """A server with the default page size returns a 1 000-record
+    microbatch in one GET, and the page token it hands out stays valid
+    after ring eviction moves the buffer's base."""
+    from streamlit_flink_demo_spark.statements import PHASE_RUNNING, Statement
+    from streamlit_flink_demo_spark.streaming.emitter import ResultBuffer
+
+    svc = StatementsService(spark)
+    buf = ResultBuffer(max_records=1500)
+    svc._statements["paged"] = Statement(
+        name="paged", sql="SELECT 1", properties={}, buffer=buf,
+        phase=PHASE_RUNNING, streaming=True,
+    )
+    buf.append([{"op": "+I", "row": [i]} for i in range(1000)])
+    srv = StatementsHTTPServer(svc).start()
+    try:
+        host, port = srv.address
+        page = _get(f"{srv.url()}/paged/results")
+        assert [r["row"] for r in page["results"]["data"]] == [
+            [i] for i in range(1000)
+        ]
+        nxt = page["metadata"]["next"]
+        assert nxt.endswith("page_token=1000")
+        buf.append([{"op": "+I", "row": [i]} for i in range(1000, 2000)])
+        page = _get(f"http://{host}:{port}{nxt}")  # base moved to 500
+        assert [r["row"] for r in page["results"]["data"]] == [
+            [i] for i in range(1000, 2000)
+        ]
+        assert page["metadata"]["next"].endswith("page_token=2000")
+        assert buf.evicted_unread == 0
+    finally:
+        srv.stop()

@@ -607,14 +607,14 @@ def _checkpoint_managers(spark, stmt) -> tuple[str, str]:
     )
 
 
-def test_ephemeral_statements_use_filesystem_checkpoint_manager(
+def test_every_statement_uses_the_filecontext_checkpoint_manager(
     spark, tmp_path
 ):
-    """Ephemeral statements (no checkpoint_dir) write their one-writer
-    checkpoint through the FileSystem-based manager, which forks no
-    readlink/chmod-per-rename subprocess on a local filesystem without
-    native IO; a checkpoint_dir statement keeps FileContext, whose
-    non-overwriting rename detects a second writer on recovery."""
+    """Ephemeral and checkpoint_dir statements write their checkpoints
+    and their file source's sources/ log through one manager, Spark's
+    default FileContext one: its non-overwriting rename detects a second
+    writer, and over the session's NIO local filesystem it forks no
+    readlink or chmod per file."""
     import os
 
     from streamlit_flink_demo_spark.sources.stream_fixtures import user_stream
@@ -630,16 +630,10 @@ def test_ephemeral_statements_use_filesystem_checkpoint_manager(
     try:
         assert eph["status"]["phase"] == "running", eph["status"]["detail"]
         assert dur["status"]["phase"] == "running", dur["status"]["detail"]
-        fs = _CKPT_FM + "FileSystemBasedCheckpointFileManager"
         fc = _CKPT_FM + "FileContextBasedCheckpointFileManager"
-        assert _checkpoint_managers(spark, svc._statements[eph["name"]]) == (
-            fs,
-            fs,
-        )
-        assert _checkpoint_managers(spark, svc._statements[dur["name"]]) == (
-            fc,
-            fc,
-        )
+        for env in (eph, dur):
+            stmt = svc._statements[env["name"]]
+            assert _checkpoint_managers(spark, stmt) == (fc, fc)
     finally:
         svc.stop(eph["name"])
         svc.stop(dur["name"])
@@ -648,7 +642,6 @@ def test_ephemeral_statements_use_filesystem_checkpoint_manager(
 _START_KEYS = (
     "spark.sql.shuffle.partitions",
     "spark.sql.streaming.stateStore.maintenanceInterval",
-    "spark.sql.streaming.checkpointFileManagerClass",
 )
 
 
@@ -672,10 +665,6 @@ def test_start_conf_window_restores_parent_session(spark, tmp_path):
     user_stream(spark, spool).createOrReplaceTempView("user_conf_window")
     svc = StatementsService(spark, stream_shuffle_partitions=3)
     before = _start_conf(spark)
-    assert before["spark.sql.streaming.checkpointFileManagerClass"] == (
-        False,
-        None,
-    )
     sql = "SELECT eyeColor, count(*) AS n FROM user_conf_window GROUP BY eyeColor"
     ok = svc.create(sql)
     try:

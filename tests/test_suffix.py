@@ -298,6 +298,33 @@ def test_capsort_contamination_on_planted_eval_copy(spark, tmp_path):
     assert out[eval_ids[1]].n_contaminated_positions == 0
 
 
+def test_capsort_contamination_ranks_skip_the_group_exchange(
+    spark, sf_dir, monkeypatch
+):
+    """(doc_id, p) is unique per position, so contamination_capsort_exact
+    ranks its windows with unique=True: its plan has one Exchange fewer
+    than the same query ranked as if keys could tie."""
+    import re
+
+    from streamlit_flink_demo_spark.operators import suffix
+
+    def exchanges() -> int:
+        df = suffix.contamination_capsort_exact(spark, sf_dir)
+        p = spark.sparkContext._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        return len(re.findall(r"\(\d+\) Exchange\b", p))
+
+    unique = exchanges()
+    rank = suffix._global_group_rank
+    monkeypatch.setattr(
+        suffix,
+        "_global_group_rank",
+        lambda df, keys, **kw: rank(df, keys, **{**kw, "unique": False}),
+    )
+    assert exchanges() == unique + 1
+
+
 def test_longest_repeat_on_planted_duplicates(spark, tmp_path):
     """Duplicate documents: every position's suffix recurs verbatim,
     so max_repeat = min(doc_len, cap); a unique-text doc's repeats

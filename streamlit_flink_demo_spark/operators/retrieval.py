@@ -64,7 +64,7 @@ from streamlit_flink_demo_spark.operators.text import (
     bm25_scores,
 )
 from streamlit_flink_demo_spark.plans import register
-from streamlit_flink_demo_spark.sources.catalog import load_spread
+from streamlit_flink_demo_spark.sources.catalog import load_spread, read_parquet
 
 _RRF_C = 60  # Cormack et al.'s constant
 _HY_K = 50  # per-leg candidate depth
@@ -739,8 +739,8 @@ def build_chunk_embed_index(
 def chunk_embed_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The chunk index as a DataFrame (doc_id, chunk_id, n_tokens,
     bucket, embedding), building the artifact first if absent/stale."""
-    return spark.read.parquet(
-        os.path.join(build_chunk_embed_index(spark, sf_dir), "data")
+    return read_parquet(
+        spark, os.path.join(build_chunk_embed_index(spark, sf_dir), "data")
     )
 
 

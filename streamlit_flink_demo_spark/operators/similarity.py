@@ -34,6 +34,7 @@ from streamlit_flink_demo_spark.plans import register, track_persist
 from streamlit_flink_demo_spark.sources.catalog import (
     load_spread,
     load_table,
+    read_parquet,
     table_path,
 )
 
@@ -520,12 +521,12 @@ def build_dup_sig_index(
 def lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The top-k signature index as a DataFrame (vec_id, embedding,
     band, bsig), building the artifact first if absent/stale."""
-    return spark.read.parquet(os.path.join(build_lsh_index(spark, sf_dir), "data"))
+    return read_parquet(spark, os.path.join(build_lsh_index(spark, sf_dir), "data"))
 
 
 def dup_sig_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(
-        os.path.join(build_dup_sig_index(spark, sf_dir), "data")
+    return read_parquet(
+        spark, os.path.join(build_dup_sig_index(spark, sf_dir), "data")
     )
 
 
@@ -1107,7 +1108,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     with open(os.path.join(path, "meta.json")) as fh:
         meta = json.load(fh)
     cents_np = np.array(meta["centroids"], dtype=np.float64)
-    inv = spark.read.parquet(os.path.join(path, "data"))
+    inv = read_parquet(spark, os.path.join(path, "data"))
     cents = _cents_df(spark, cents_np)
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < _N_QUERIES).select(
@@ -1777,7 +1778,7 @@ def pq_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, "np.ndarray"]
     art = build_pq_index(spark, sf_dir)
     with open(os.path.join(art, "meta.json")) as fh:
         books = np.array(json.load(fh)["codebooks"], dtype=np.float64)
-    return spark.read.parquet(os.path.join(art, "data")), books
+    return read_parquet(spark, os.path.join(art, "data")), books
 
 
 @register(
@@ -2132,7 +2133,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         meta = json.load(fh)
     cents_np = np.array(meta["centroids"], dtype=np.float64)
     books = np.array(meta["codebooks"], dtype=np.float64)
-    codes = spark.read.parquet(os.path.join(path, "data"))
+    codes = read_parquet(spark, os.path.join(path, "data"))
     q = _pq_queries(spark, sf_dir)
     wp = W.partitionBy("q_id").orderBy(F.col("c_cs").desc(), F.col("c_id"))
     probes = (

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from streamlit_flink_demo_spark.functions.hashing import u60
+from streamlit_flink_demo_spark.sources.catalog import read_parquet
 
 # Signatures of "the path vanished under the read" across the places it
 # can surface: AnalysisException PATH_NOT_FOUND at plan time, the JVM
@@ -86,7 +87,7 @@ def read_shard(spark: SparkSession, path: str, shard: int) -> DataFrame:
     """Read one shard via partition pruning (no other shard's files
     are touched — the pushed filter on the partition column prunes
     directories, not rows)."""
-    return spark.read.parquet(path).filter(F.col("shard") == shard)
+    return read_parquet(spark, path).filter(F.col("shard") == shard)
 
 
 # --------------------------------------------------------------------------

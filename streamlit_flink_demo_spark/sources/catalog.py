@@ -44,8 +44,106 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+# Parquet schemas, memoized per session (weak key) and per path:
+# ``{path: (signature, schema)}``. Inferring a parquet schema launches
+# a Spark job that re-reads a footer; a plan build reads the same stable
+# tables and artifact indexes on every build. The signature is the
+# on-disk identity of every file under the path plus the session's
+# values of the confs that change inference, so a rewrite (in place or
+# by rename) or a conf change re-infers; no invalidation hook is needed.
+# Paths that are new on each call (per-batch and committed sink dirs,
+# compaction and incremental deltas) stay on ``spark.read.parquet``:
+# an entry per path there would only grow.
+_PARQUET_SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, dict[str, tuple]]" = (
+    weakref.WeakKeyDictionary()
+)
+# (relative name, st_ino, st_size, st_mtime_ns) per file, sorted
+_FileStats = tuple[tuple[str, int, int, int], ...]
+
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+
+def _file_stats(path: str) -> _FileStats:
+    """``(relative name, st_ino, st_size, st_mtime_ns)`` of the file at
+    ``path``, or of every file under the directory at ``path``, from one
+    ``os.stat`` or one ``os.walk``. Raises ``FileNotFoundError`` when
+    ``path`` does not exist."""
+    st = os.stat(path)
+    if not os.path.isdir(path):
+        return (("", st.st_ino, st.st_size, st.st_mtime_ns),)
+    out = []
+    for root, _, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            out.append(
+                (os.path.relpath(full, path), st.st_ino, st.st_size, st.st_mtime_ns)
+            )
+    return tuple(sorted(out))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, _FileStats]:
+    """``read_parquet`` plus the file stats its signature was built from."""
+    try:
+        files = _file_stats(path)
+    except FileNotFoundError:
+        # missing, or not a local path: Spark reads it or raises its own error
+        return spark.read.parquet(path), ()
+    sig = (files, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    memo = _PARQUET_SCHEMAS.setdefault(spark, {})
+    hit = memo.get(path)
+    if hit is not None and hit[0] == sig:
+        return spark.read.schema(hit[1]).parquet(path), files
+    df = spark.read.parquet(path)
+    memo[path] = (sig, df.schema)
+    return df, files
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` for a path whose files outlive the
+    call (a catalog table, an artifact index), with the inferred schema
+    memoized per session. The first read of a path infers its schema,
+    which runs a Spark job; later reads with the same files (name,
+    inode, size, mtime) and the same inference confs pass the stored
+    schema and run none. A missing path raises Spark's own error."""
+    return _read_parquet(spark, path)[0]
+
+
+def _load_table(
+    spark: SparkSession, sf_dir: str, name: str
+) -> tuple[DataFrame, _FileStats]:
+    if name not in TABLES:
+        raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
+    path = table_path(sf_dir, name)
+    if name != "events":
+        return _read_parquet(spark, path)
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    # set before the read, so the schema memo keys on the value in force
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df, files = _read_parquet(spark, path)
+    ts_type = df.schema["ts"].dataType
+    if isinstance(ts_type, T.LongType):
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    elif isinstance(ts_type, T.TimestampNTZType):
+        df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+    return df, files
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one table. Lazy — no I/O until an action runs.
+    """Read one table through ``read_parquet``. The first read of a table
+    in a session infers its schema, which runs one Spark job; later reads
+    reuse the schema memoized under the table's file signature (name,
+    inode, size and mtime of every file) and the session's parquet
+    inference confs, and run no job until an action does.
 
     ``events.parquet`` has shipped ``ts`` in three vintages: parquet
     TIMESTAMP(NANOS) (which Spark refuses to map to TimestampType — we
@@ -57,21 +155,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     agrees with DuckDB's naive read) so downstream operators always see
     one type.
     """
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
-    if name == "events":
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(ts_type, T.TimestampNTZType):
-            df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-        return df
-    return spark.read.parquet(table_path(sf_dir, name))
+    return _load_table(spark, sf_dir, name)[0]
 
 
 # Memoized scan-partition counts, keyed (weak session → table key):
@@ -136,14 +220,7 @@ def table_bytes(sf_dir: str, name: str) -> int:
 
     Raises ``FileNotFoundError`` when the table is missing: reading a
     missing table as 0 bytes would silently pass every size gate."""
-    path = table_path(sf_dir, name)
-    if os.path.isdir(path):
-        return sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, files in os.walk(path)
-            for f in files
-        )
-    return os.path.getsize(path)
+    return sum(f[2] for f in _file_stats(table_path(sf_dir, name)))
 
 
 def load_spread(
@@ -162,8 +239,9 @@ def load_spread(
     (≈5 MB documents) the shuffle is a measured 2-4× LOSS, while at
     10× replication (≈50 MB, one parquet file → few scan tasks) the
     unspread kernel goes super-linear (measured 6-21× for 10× data)."""
-    df = load_table(spark, sf_dir, name)
-    if min_bytes and table_bytes(sf_dir, name) < min_bytes:
+    df, files = _load_table(spark, sf_dir, name)
+    # the size gate reuses the stats the schema memo walked for
+    if min_bytes and sum(f[2] for f in files) < min_bytes:
         return df
     return spread(df, key=f"{sf_dir}/{name}")
 

@@ -55,6 +55,7 @@ from streamlit_flink_demo_spark.operators.extract import (
     url_host,
 )
 from streamlit_flink_demo_spark.sinks import IdempotentParquetSink
+from streamlit_flink_demo_spark.sources.catalog import read_parquet
 from streamlit_flink_demo_spark.streaming.ingest import (
     land_and_summarize,
     start_ingest,
@@ -119,7 +120,7 @@ def seen_rows(
     spark = batch.sparkSession
     parts = []
     if index_path is not None and os.path.isdir(index_path):
-        parts.append(spark.read.parquet(index_path))
+        parts.append(read_parquet(spark, index_path))
     try:
         parts.append(sink.read_committed(spark))
     except ValueError:

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from streamlit_flink_demo_spark.sinks import IdempotentParquetSink
 
@@ -71,7 +71,21 @@ def start_ingest(
     the query terminates; it is read at that time, so a pipeline that
     swaps its cached frames mid-stream passes the live list (even an
     empty one)."""
-    writer = stream.writeStream.outputMode("append").foreachBatch(on_batch)
+    held: list[SparkSession] = []
+
+    def run(batch: DataFrame, batch_id: int) -> None:
+        # PySpark wraps each microbatch's stream session, the same JVM
+        # session for the whole run, in a new SparkSession object. Hand
+        # on_batch one object per run, so per-session memos (the parquet
+        # schemas of ``catalog.read_parquet``) carry across its batches.
+        jsession = batch.sparkSession._jsparkSession
+        if held and held[0]._jsparkSession.equals(jsession):
+            batch = DataFrame(batch._jdf, held[0])
+        else:
+            held[:] = [batch.sparkSession]
+        on_batch(batch, batch_id)
+
+    writer = stream.writeStream.outputMode("append").foreachBatch(run)
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
     query = writer.start()

@@ -129,6 +129,44 @@ def test_stream_dedups_across_batches_and_base_index(spark, tmp_path):
     assert set(urls) == twin
 
 
+def test_base_index_schema_is_memoized_across_batches(
+    spark, tmp_path, monkeypatch
+):
+    """Every microbatch reads the base index through
+    ``catalog.read_parquet`` with the one session object the ingest
+    runner hands its batches, so its schema is inferred once per run,
+    not once per batch."""
+    from streamlit_flink_demo_spark.sources import catalog
+
+    spool = str(tmp_path / "spool")
+    os.makedirs(spool)
+    base = str(tmp_path / "seen_base")
+    init_frontier_index(
+        spark.createDataFrame([("https://other.net/p",)], "url string"), base
+    )
+    reads = []
+    real = catalog._read_parquet
+
+    def spy(session, path):
+        reads.append((session, path))
+        return real(session, path)
+
+    monkeypatch.setattr(catalog, "_read_parquet", spy)
+    q = attach_frontier_stream(
+        _stream(spark, spool), str(tmp_path / "frontier"), index_path=base
+    )
+    try:
+        for n, rows in enumerate((_B0, _B1, [(6, "https://third.org/x")])):
+            _write_batch(spark, spool, n, rows)
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    sessions = [s for s, p in reads if p == base]
+    assert len(sessions) == 3
+    assert all(s is sessions[0] for s in sessions)
+    assert base in catalog._PARQUET_SCHEMAS[sessions[0]]
+
+
 def test_restart_replay_is_exactly_once(spark, tmp_path):
     spool = str(tmp_path / "spool")
     os.makedirs(spool)

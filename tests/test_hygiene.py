@@ -304,3 +304,56 @@ def test_only_the_ingest_runner_drives_foreach_batch():
     assert {k: sorted(v) for k, v in sites.items()} == {
         "ingest.py": ["foreachBatch", "listener"]
     }
+
+
+# Modules that may call ``.read.parquet(`` directly: each reads paths
+# that are new on each call, where a schema memo entry would only grow.
+_RAW_PARQUET_READERS = {
+    "sinks.py": "per-batch dirs and committed dir sets: new with every batch",
+    "operators/compaction.py": "unfolded sink dirs: new with every batch",
+    "operators/incremental.py": "a live index version and its deltas: new per publish",
+}
+
+
+def test_stable_parquet_reads_go_through_the_schema_memo():
+    """Under the package, ``.read.parquet(`` appears only in
+    ``catalog._read_parquet`` (behind ``read_parquet``) and in the
+    modules above: a stable table or artifact read elsewhere would
+    re-run schema inference, one Spark job, on every plan build."""
+    import ast
+    from pathlib import Path
+
+    import streamlit_flink_demo_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    sites: set[str] = set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel in _RAW_PARQUET_READERS:
+            continue
+        tree = ast.parse(path.read_text())
+        scopes = [
+            (f.name, f)
+            for f in ast.walk(tree)
+            if isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "read"
+            ):
+                continue
+            # the innermost function around the call
+            owner = min(
+                (
+                    (f.end_lineno - f.lineno, name)
+                    for name, f in scopes
+                    if f.lineno <= node.lineno <= f.end_lineno
+                ),
+                default=(0, "<module>"),
+            )[1]
+            sites.add(f"{rel}:{owner}")
+    assert sites == {"sources/catalog.py:_read_parquet"}
